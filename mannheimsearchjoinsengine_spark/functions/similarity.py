@@ -1,4 +1,4 @@
-"""Value-similarity kernels (reference F1/F3/F4/F5/F6).
+"""Value-similarity kernels (reference F1/F3/F6).
 
 All native Catalyst expressions — whole-stage codegen, zero Python:
 
@@ -9,9 +9,9 @@ All native Catalyst expressions — whole-stage codegen, zero Python:
   sequence+transform+substring, Jaccard via array_intersect / union sizes.
 * F3 numeric similarity ``0.5·min/max`` (|·|), 1.0 if equal
   (``InstanceBasedComparer.compareColumnValues:530-548``).
-* F4 date similarity = 1 − |days diff| / range
-  (``InstanceBasedComparer.java:566-588``).
-* F5 bool/link exact match (``InstanceBasedComparer.java:589-618``).
+* F4 date and F5 bool/link scores live in the typed kernel
+  ``operators/match._typed_score``, with the reference's inverted date
+  kernel (``InstanceBasedComparer.java:566-618``).
 * F6 deviation = 1 − similarity (``InstanceBasedComparer.getValueDeviation:
   644-767``).
 
@@ -51,19 +51,6 @@ def numeric_similarity(a: Column, b: Column) -> Column:
     return F.when(a == b, F.lit(1.0)).otherwise(
         F.round(0.5 * F.least(F.abs(a), F.abs(b)) / F.greatest(F.abs(a), F.abs(b)), 4)
     )
-
-
-def date_similarity(a: Column, b: Column, range_days: Column) -> Column:
-    """F4 — 1 − |datediff| / range (clamped at 0); range is the column's
-    observed min-max span (``InstanceBasedComparer.java:356-420``)."""
-    return F.round(
-        F.greatest(F.lit(0.0), 1 - F.abs(F.datediff(a, b)) / range_days), 4
-    )
-
-
-def exact_match_score(a: Column, b: Column) -> Column:
-    """F5 — bool/link equality score."""
-    return F.when(a == b, F.lit(1.0)).otherwise(F.lit(0.0))
 
 
 def deviation(sim: Column) -> Column:

@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from mannheimsearchjoinsengine_spark.operators.profile import majority_dtype
+
 
 def evidence(cells: DataFrame) -> DataFrame:
     """Distinct (pred, subj, obj) evidence, materialized once — it feeds
@@ -118,26 +120,9 @@ def pred_merge_map(cells: DataFrame, tau: float = 0.7, min_shared: int = 2) -> D
     )
 
 
-def apply_pred_merge(cells: DataFrame, merge_map: DataFrame) -> DataFrame:
-    """Rewrite cells onto canonical predicates (broadcast map join)."""
-    return cells.join(F.broadcast(merge_map), "pred_raw").withColumn(
-        "pred_canon", F.col("pred_canon")
-    )
-
-
 # ---------------------------------------------------------------------------
 # A3 full form — typed instance-based column scoring
 # ---------------------------------------------------------------------------
-
-def _pred_major_dtype(cells: DataFrame) -> DataFrame:
-    votes = cells.groupBy("pred_raw", "dtype").agg(F.count("*").alias("n"))
-    w = Window.partitionBy("pred_raw").orderBy(F.desc("n"), F.asc("dtype"))
-    return (
-        votes.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("pred_raw", F.col("dtype").alias("dtype_major"))
-    )
-
 
 def _typed_score(dtype, v1, v2, range_days):
     """Per-dtype value kernel, reference-exact including its quirks
@@ -221,7 +206,7 @@ def typed_pair_scores(cells: DataFrame) -> DataFrame:
     rep = (
         cells.withColumn("rn", F.row_number().over(wr))
         .filter(F.col("rn") == 1)
-        .join(F.broadcast(_pred_major_dtype(cells)), "pred_raw")
+        .join(F.broadcast(majority_dtype(cells, "pred_raw")), "pred_raw")
         .select("pred_raw", "subj_norm", "obj_raw", "dtype_major")
         .localCheckpoint()
     )

@@ -31,27 +31,24 @@ def typed_cells(facts: DataFrame) -> DataFrame:
     return facts.withColumn("dtype", guess_type(F.col("obj_raw")))
 
 
-def pred_profile(cells: DataFrame) -> DataFrame:
-    """Per-predicate profile: majority dtype + stats (P7 + P8).
+def majority_dtype(cells: DataFrame, key: str) -> DataFrame:
+    """The majority-dtype vote per ``key`` (P7): the dtype with the most
+    values, tie → dtype ascending. Two shuffles, both tiny after map-side
+    partial agg: (key, dtype) counts, then min of (-n, dtype)."""
+    votes = cells.groupBy(key, "dtype").count()
+    win = F.min(F.struct((-F.col("count")).alias("neg_n"), "dtype"))
+    return votes.groupBy(key).agg(win["dtype"].alias("dtype_major"))
 
-    Majority vote = max_by(count) with (count desc, dtype asc) tie-break —
-    two shuffles on `pred_raw` (dtype vote needs the (pred, dtype) grain),
-    both tiny after map-side partial agg.
-    """
-    votes = cells.groupBy("pred_raw", "dtype").agg(F.count("*").alias("n"))
-    w = Window.partitionBy("pred_raw").orderBy(F.desc("n"), F.asc("dtype"))
-    majority = (
-        votes.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("pred_raw", F.col("dtype").alias("dtype_major"))
-    )
+
+def pred_profile(cells: DataFrame) -> DataFrame:
+    """Per-predicate profile: majority dtype + stats (P7 + P8)."""
     stats = cells.groupBy("pred_raw").agg(
         F.count("*").alias("n_values"),
         F.countDistinct("obj_raw").alias("n_distinct"),
         F.round(F.avg(F.length("obj_raw")), 4).alias("avg_len"),
         F.countDistinct("subj_norm").alias("n_subjects"),
     )
-    return stats.join(majority, "pred_raw")
+    return stats.join(majority_dtype(cells, "pred_raw"), "pred_raw")
 
 
 def value_multiplicity(cells: DataFrame) -> DataFrame:

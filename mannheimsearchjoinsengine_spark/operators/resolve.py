@@ -24,13 +24,14 @@ Reference quirks replicated on purpose (flagged in SURVEY.md §7):
 Values are numeric-normalized before resolution exactly like the reference
 (``TableDataCleaner.normalizeColumnNumeric:167-180`` runs pre-resolution).
 
-All window functions over (subj, pred) groups — group sizes are bounded by
-assertion counts per entity-fact, no skew concern.
+Every rule is computed once, by :func:`resolve_rules`: one aggregation per
+(subj, pred) group over the value grain. A group's distinct values are held
+in one array, bounded by the distinct values per entity-attribute.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from mannheimsearchjoinsengine_spark.functions.typeguess import parse_numeric
@@ -171,85 +172,8 @@ def duck_parse_date(expr: str) -> str:
     return f"CAST(coalesce({tries}) AS DATE)"
 
 
-def resolve_voting(cells: DataFrame, keys=("subj_norm", "pred_canon")) -> DataFrame:
-    """A4 — plurality vote; tie → first value to reach the max count."""
-    grp = cells.groupBy(*keys, "obj_raw").agg(
-        F.count("*").alias("cnt"), F.max("ts").alias("last_ts")
-    )
-    w = Window.partitionBy(*keys).orderBy(
-        F.desc("cnt"), F.asc("last_ts"), F.asc("obj_raw")
-    )
-    return (
-        grp.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(*keys, F.col("obj_raw").alias("obj_resolved"), F.col("cnt").alias("votes"))
-    )
-
-
-def resolve_median(cells: DataFrame, keys=("subj_norm", "pred_canon")) -> DataFrame:
-    """A5 — the reference's upper-median over numeric-normalized values."""
-    vals = cells.withColumn("num", parse_numeric(F.col("obj_raw"))).filter(
-        F.col("num").isNotNull()
-    )
-    w = Window.partitionBy(*keys).orderBy(F.asc("num"), F.asc("ts"))
-    ranked = vals.withColumn("rn", F.row_number().over(w)).withColumn(
-        "n", F.count("*").over(Window.partitionBy(*keys))
-    )
-    pick = F.when(F.col("n") == 1, 1).when(
-        F.col("n") % 2 == 0, F.col("n") / 2 + 1
-    ).otherwise(F.floor(F.col("n") / 2) + 2)
-    return ranked.filter(F.col("rn") == pick).select(
-        *keys, F.col("num").alias("obj_resolved"), F.col("n").alias("n_values")
-    )
-
-
-def resolve_first(cells: DataFrame, keys=("subj_norm", "pred_canon")) -> DataFrame:
-    """default branch — keep the first (row-order) value."""
-    w = Window.partitionBy(*keys).orderBy(F.asc("ts"), F.asc("obj_raw"))
-    return (
-        cells.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(*keys, F.col("obj_raw").alias("obj_resolved"))
-    )
-
-
-def resolve_longest(cells: DataFrame, keys=("subj_norm", "pred_canon")) -> DataFrame:
-    """A6 longest-string mode (``getLargestValue:446-457``; first value with
-    the max length wins)."""
-    w = Window.partitionBy(*keys).orderBy(
-        F.desc(F.length("obj_raw")), F.asc("ts"), F.asc("obj_raw")
-    )
-    return (
-        cells.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(*keys, F.col("obj_raw").alias("obj_resolved"))
-    )
-
-
-def resolve_average(cells: DataFrame, keys=("subj_norm", "pred_canon")) -> DataFrame:
-    """A6 average mode (``getAverageFromList:423-430``)."""
-    vals = cells.withColumn("num", parse_numeric(F.col("obj_raw"))).filter(
-        F.col("num").isNotNull()
-    )
-    return vals.groupBy(*keys).agg(F.round(F.avg("num"), 4).alias("obj_resolved"))
-
-
-def resolve_date_average(cells: DataFrame, keys=("subj_norm", "pred_canon")) -> DataFrame:
-    """A6 date-average replicating the last-date-only bug: result =
-    trunc(epoch_seconds(last date) / n)."""
-    vals = cells.withColumn("d", parse_any_date(F.col("obj_raw"))).filter(
-        F.col("d").isNotNull()
-    )
-    w = Window.partitionBy(*keys).orderBy(F.desc("ts"))
-    last = vals.withColumn("rn", F.row_number().over(w)).withColumn(
-        "n", F.count("*").over(Window.partitionBy(*keys))
-    ).filter(F.col("rn") == 1)
-    epoch = F.unix_timestamp(F.col("d").cast("timestamp"))
-    return last.select(
-        *keys,
-        (epoch / F.col("n")).cast("long").alias("avg_epoch_s"),
-        F.col("n").alias("n_values"),
-    )
+# numeric prefix of a value ("500 km2" → "500"): the median's parse
+_NUM_PREFIX = r"^(-?[0-9][0-9,]*(\.[0-9]+)?)"
 
 
 def value_grain(cells: DataFrame, keys=("subj_norm", "pred_canon")) -> DataFrame:
@@ -267,91 +191,128 @@ def value_grain(cells: DataFrame, keys=("subj_norm", "pred_canon")) -> DataFrame
     )
 
 
+def resolve_rules(cells: DataFrame, keys=("subj_norm", "pred_canon")) -> DataFrame:
+    """Every resolution rule for every group, from one aggregation over the
+    value grain. One row per key:
+
+    * ``dtype_major`` — the group's majority dtype by Σcnt, tie → dtype
+      ascending;
+    * ``vote``/``votes`` — voting: the max-count value with the smallest
+      last_ts (its max-count-th occurrence is its last one), tie → obj_raw;
+    * ``median``/``n_median`` — the row-indexed upper median of the values'
+      numeric prefixes: equal nums are adjacent in the reference's (num, ts)
+      row order, so a cumulative count over the grain sorted by
+      (num, first_ts) finds the picked row;
+    * ``avg_epoch_s``/``n_dates`` — the date-average bug: epoch seconds of
+      the last parseable date (by ts) / the number of parseable dates;
+    * ``first`` — the first value by ts, tie → obj_raw.
+
+    A rule none of whose values parse yields NULL. Each key's grain rows are
+    collected into one array, so its size is the number of distinct values
+    of one (subj_norm, pred_canon) — bounded by distinct values per
+    entity-attribute, not by turns. It is not capped: a cap would silently
+    change the output."""
+    keys = list(keys)
+    num = parse_numeric(F.regexp_extract("obj_raw", _NUM_PREFIX, 1))
+    d = parse_any_date(F.col("obj_raw"))
+    cnt = F.col("cnt")
+    groups = value_grain(cells, keys).groupBy(*keys).agg(
+        F.collect_list(F.struct(num.alias("num"), "first_ts", "cnt", "dtype")).alias("vals"),
+        F.min(F.struct((-cnt).alias("neg_cnt"), "last_ts", "obj_raw")).alias("vote"),
+        F.sum(F.when(num.isNotNull(), cnt)).alias("n_median"),
+        F.max(F.when(d.isNotNull(), F.struct("last_ts", d.alias("d")))).alias("last_date"),
+        F.sum(F.when(d.isNotNull(), cnt)).alias("n_dates"),
+        F.min(F.struct("first_ts", "obj_raw")).alias("first"),
+    )
+    vals = F.col("vals")
+    zero = F.lit(0).cast("long")
+
+    def n_of(dtype):
+        same = F.filter(vals, lambda v: v.dtype == dtype)
+        return F.aggregate(same, zero, lambda n, v: n + v.cnt)
+
+    major = F.array_min(
+        F.transform(
+            F.array_distinct(F.transform(vals, lambda v: v.dtype)),
+            lambda t: F.struct((-n_of(t)).alias("neg_n"), t.alias("dtype")),
+        )
+    )
+
+    n = F.col("n_median")
+    half = F.floor(n / 2)
+    start = F.struct(
+        F.when(n == 1, 1).when(n % 2 == 0, half + 1).otherwise(half + 2).alias("pick"),
+        zero.alias("cum"),
+        F.lit(None).cast("double").alias("num"),
+    )
+
+    def step(acc, v):
+        cum = acc.cum + v.cnt
+        hit = (acc.cum < acc.pick) & (acc.pick <= cum)
+        return F.struct(
+            acc.pick.alias("pick"),
+            cum.alias("cum"),
+            F.when(hit, v.num).otherwise(acc.num).alias("num"),
+        )
+
+    nums = F.array_sort(F.filter(vals, lambda v: v.num.isNotNull()))
+    epoch = F.unix_timestamp(F.col("last_date.d").cast("timestamp"))
+    return groups.select(
+        *keys,
+        major["dtype"].alias("dtype_major"),
+        F.col("vote.obj_raw").alias("vote"),
+        (-F.col("vote.neg_cnt")).alias("votes"),
+        F.aggregate(nums, start, step, lambda acc: acc.num).alias("median"),
+        "n_median",
+        (epoch / F.col("n_dates")).cast("long").alias("avg_epoch_s"),
+        "n_dates",
+        F.col("first.obj_raw").alias("first"),
+    )
+
+
+def resolve_voting(cells: DataFrame, keys=("subj_norm", "pred_canon")) -> DataFrame:
+    """A4 — plurality vote; tie → first value to reach the max count."""
+    return resolve_rules(cells, keys).select(
+        *keys, F.col("vote").alias("obj_resolved"), "votes"
+    )
+
+
+def resolve_median(cells: DataFrame, keys=("subj_norm", "pred_canon")) -> DataFrame:
+    """A5 — the reference's upper-median over numeric-normalized values."""
+    return (
+        resolve_rules(cells, keys)
+        .filter(F.col("median").isNotNull())
+        .select(
+            *keys, F.col("median").alias("obj_resolved"), F.col("n_median").alias("n_values")
+        )
+    )
+
+
+def resolve_date_average(cells: DataFrame, keys=("subj_norm", "pred_canon")) -> DataFrame:
+    """A6 date-average replicating the last-date-only bug: result =
+    trunc(epoch_seconds(last date) / n)."""
+    return (
+        resolve_rules(cells, keys)
+        .filter(F.col("avg_epoch_s").isNotNull())
+        .select(*keys, "avg_epoch_s", F.col("n_dates").alias("n_values"))
+    )
+
+
 def resolve_dispatch(cells: DataFrame, keys=("subj_norm", "pred_canon")) -> DataFrame:
     """Full dispatch over the group's majority dtype:
     string→voting, numeric/unit→median, date→date-average-bug,
     else→first. Output obj_resolved is always a string (the reference's
-    all-strings model).
-
-    Shape: one value_grain shuffle over the corpus, then all four branches
-    run on the materialized grain (an earlier version joined dtype_major
-    back onto the full cell table and fanned THAT into four branches —
-    measured 67 s vs ~15 s at 8M turns)."""
-    keys = list(keys)
-    g = value_grain(cells, keys).localCheckpoint()
-    wd = Window.partitionBy(*keys).orderBy(F.desc("dn"), F.asc("dtype"))
-    major = (
-        g.groupBy(*keys, "dtype")
-        .agg(F.sum("cnt").alias("dn"))
-        .withColumn("rn", F.row_number().over(wd))
-        .filter(F.col("rn") == 1)
-        .select(*keys, F.col("dtype").alias("dtype_major"))
+    all-strings model); a group whose rule finds no parseable value emits
+    no row."""
+    major = F.col("dtype_major")
+    resolved = (
+        F.when(major == "string", F.col("vote"))
+        .when(major.isin("numeric", "unit"), F.col("median").cast("string"))
+        .when(major == "date", F.col("avg_epoch_s").cast("string"))
+        .otherwise(F.col("first"))
     )
-    gm = g.join(major, keys)
-
-    # voting: cnt desc, then first value to reach the max (= min last_ts)
-    wv = Window.partitionBy(*keys).orderBy(
-        F.desc("cnt"), F.asc("last_ts"), F.asc("obj_raw")
+    return (
+        resolve_rules(cells, keys)
+        .select(*keys, resolved.alias("obj_resolved"))
+        .filter(F.col("obj_resolved").isNotNull())
     )
-    voting = (
-        gm.filter(F.col("dtype_major") == "string")
-        .withColumn("rn", F.row_number().over(wv))
-        .filter(F.col("rn") == 1)
-        .select(*keys, F.col("obj_raw").alias("obj_resolved"))
-    )
-
-    # median: row-indexed upper median from (num, cnt) cumulative ranges —
-    # equal nums are adjacent in the reference's (num, ts) row order, so the
-    # value at the picked index only depends on counts.
-    med_vals = (
-        gm.filter(F.col("dtype_major").isin("numeric", "unit"))
-        .withColumn(
-            "num",
-            parse_numeric(
-                F.regexp_extract("obj_raw", r"^(-?[0-9][0-9,]*(\.[0-9]+)?)", 1)
-            ),
-        )
-        .filter(F.col("num").isNotNull())
-    )
-    wm = Window.partitionBy(*keys).orderBy(F.asc("num"), F.asc("first_ts"))
-    wn = Window.partitionBy(*keys)
-    med_ranked = (
-        med_vals.withColumn("cum", F.sum("cnt").over(wm))
-        .withColumn("n", F.sum("cnt").over(wn))
-    )
-    pick = F.when(F.col("n") == 1, F.lit(1).cast("double")).when(
-        F.col("n") % 2 == 0, F.col("n") / 2 + 1
-    ).otherwise(F.floor(F.col("n") / 2) + 2)
-    med = med_ranked.filter(
-        (F.col("cum") - F.col("cnt") < pick) & (pick <= F.col("cum"))
-    ).select(*keys, F.col("num").cast("string").alias("obj_resolved"))
-
-    # date-average bug: epoch(last date by ts) / n (ts unique per turn)
-    dvals = (
-        gm.filter(F.col("dtype_major") == "date")
-        .withColumn("d", parse_any_date(F.col("obj_raw")))
-        .filter(F.col("d").isNotNull())
-    )
-    wdt = Window.partitionBy(*keys).orderBy(F.desc("last_ts"))
-    dates = (
-        dvals.withColumn("rn", F.row_number().over(wdt))
-        .withColumn("n", F.sum("cnt").over(wn))
-        .filter(F.col("rn") == 1)
-        .select(
-            *keys,
-            (F.unix_timestamp(F.col("d").cast("timestamp")) / F.col("n"))
-            .cast("long")
-            .cast("string")
-            .alias("obj_resolved"),
-        )
-    )
-
-    # first: min ts row (unique), tie-break obj asc matches resolve_first
-    wf = Window.partitionBy(*keys).orderBy(F.asc("first_ts"), F.asc("obj_raw"))
-    rest = (
-        gm.filter(~F.col("dtype_major").isin("string", "numeric", "unit", "date"))
-        .withColumn("rn", F.row_number().over(wf))
-        .filter(F.col("rn") == 1)
-        .select(*keys, F.col("obj_raw").alias("obj_resolved"))
-    )
-    return voting.unionByName(med).unionByName(dates).unionByName(rest)

@@ -22,7 +22,7 @@ from mannheimsearchjoinsengine_spark.operators.extract import extract_facts, ext
 from mannheimsearchjoinsengine_spark.operators.index import build_attributes, build_postings
 from mannheimsearchjoinsengine_spark.operators.match import pred_merge_map
 from mannheimsearchjoinsengine_spark.operators.probe import join_results
-from mannheimsearchjoinsengine_spark.operators.profile import pred_profile, typed_cells
+from mannheimsearchjoinsengine_spark.operators.profile import majority_dtype, typed_cells
 from mannheimsearchjoinsengine_spark.operators.resolve import resolve_dispatch
 from mannheimsearchjoinsengine_spark.operators.triplify import to_triples
 from mannheimsearchjoinsengine_spark.sources.catalog import StageLedger
@@ -114,16 +114,20 @@ def run_pipeline(
         fingerprint = f"{sf_dir}:{_input_rows(sf_dir)}" if ledger else ""
 
     def stage(name: str, build, partition_by=None) -> DataFrame:
-        # label the stage's jobs in the Spark UI / REST metrics
+        # label the stage's jobs in the Spark UI / REST metrics; the label
+        # is thread-local, so clear it before the thread runs anything else
         spark.sparkContext.setJobDescription(f"kg-stage:{name}")
-        if ledger is None:
-            # Cut lineage at every stage boundary: downstream stages fan the
-            # upstream subtree into several branches (resolve dispatch alone
-            # embeds it 4×), and an uncut plan tree re-runs whole subtrees —
-            # measured 177 s vs ~90 s at 2M turns for a lazy vs materialized
-            # DAG. The ledger path materializes to parquet instead.
-            return build().localCheckpoint()
-        return ledger.materialize(name, fingerprint, build, partition_by)
+        try:
+            if ledger is None:
+                # Cut lineage at every stage boundary: most stages are read by
+                # several later ones (cells feeds all but triples), and an uncut
+                # plan tree re-runs the shared upstream subtree per reader —
+                # measured 177 s vs ~90 s at 2M turns for a lazy vs
+                # materialized DAG. The ledger path materializes to parquet.
+                return build().localCheckpoint()
+            return ledger.materialize(name, fingerprint, build, partition_by)
+        finally:
+            spark.sparkContext.setJobDescription(None)
 
     def stage_rows(name: str, df: DataFrame) -> int:
         # measured size of a materialized stage, for broadcast gating: free
@@ -205,11 +209,7 @@ def run_pipeline(
             stage, "resolved", lambda: resolve_dispatch(cells_canon, ("subj_norm", "pred_canon"))
         )
         dtypes_f = pool.submit(
-            stage,
-            "pred_dtypes",
-            lambda: pred_profile(
-                cells_canon.withColumn("pred_raw", F.col("pred_canon"))
-            ).select(F.col("pred_raw").alias("pred_canon"), "dtype_major"),
+            stage, "pred_dtypes", lambda: majority_dtype(cells_canon, "pred_canon")
         )
         resolved = resolved_f.result()
         clusters = clusters_f.result()
@@ -228,7 +228,8 @@ def run_pipeline(
         attributes = attributes_f.result()
         jr = jr_f.result()
     finally:
-        pool.shutdown(wait=True)
+        # a failed stage must not let queued sibling stages start
+        pool.shutdown(wait=True, cancel_futures=True)
     return {
         "transcripts": transcripts,
         "facts": facts,

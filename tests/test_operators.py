@@ -16,19 +16,23 @@ from mannheimsearchjoinsengine_spark.functions.typeguess import guess_type
 from mannheimsearchjoinsengine_spark.operators.canonical import connected_components
 from mannheimsearchjoinsengine_spark.operators.resolve import (
     resolve_date_average,
+    resolve_dispatch,
     resolve_median,
     resolve_voting,
 )
 
 
 def _cells(spark, values, dtype="string"):
+    """One (s, p) group, values in ts order; ``dtype`` is one dtype for
+    every value or a list with one dtype per value."""
+    dtypes = [dtype] * len(values) if isinstance(dtype, str) else dtype
     base = dt.datetime(2026, 1, 1)
     rows = [
         Row(
             subj_norm="s", pred_canon="p", obj_raw=v,
-            ts=base + dt.timedelta(seconds=37 * i), dtype=dtype,
+            ts=base + dt.timedelta(seconds=37 * i), dtype=t,
         )
-        for i, v in enumerate(values)
+        for i, (v, t) in enumerate(zip(values, dtypes))
     ]
     return spark.createDataFrame(rows)
 
@@ -63,6 +67,27 @@ def test_date_average_last_date_bug(spark):
     df = _cells(spark, ["2000-01-01", "1970-01-03"], dtype="date")
     out = resolve_date_average(df).collect()[0]
     assert out.avg_epoch_s == (2 * 86400) // 2  # last date epoch / n
+
+
+@pytest.mark.parametrize(
+    "vals,dtype,expected",
+    [
+        # 1:1 dtype vote → dtype ascending picks numeric (median), not
+        # string (voting would return "10")
+        (["10", "abc"], ["numeric", "string"], "10.0"),
+        # date majority: the non-date value is left out of both the last
+        # date and n → epoch(1970-01-03) / 2
+        (["2000-01-01", "1970-01-03", "unknown"], ["date", "date", "string"], "86400"),
+        # unit values resolve by their numeric prefix; odd n → index n/2+1
+        (["500 km2", "1,200 km2", "80 km2"], "unit", "1200.0"),
+        (["7"], "numeric", "7.0"),  # median of n = 1
+        (["true", "false", "false"], "bool", "true"),  # first value by ts
+        (["2000-13-45", "99.99.9999"], "date", None),  # nothing parses → no row
+    ],
+)
+def test_resolve_dispatch_branches(spark, vals, dtype, expected):
+    out = [r.obj_resolved for r in resolve_dispatch(_cells(spark, vals, dtype)).collect()]
+    assert out == ([] if expected is None else [expected])
 
 
 def test_norm_key_variants(spark):

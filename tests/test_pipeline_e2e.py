@@ -68,6 +68,15 @@ def test_checkpoint_resume_identical(spark, sf_dir, tmp_path_factory):
     assert {"cells", "postings", "resolved", "triples"} <= stages
 
 
+def test_run_pipeline_clears_job_description(spark, sf_dir):
+    """Stages label their jobs ``kg-stage:<name>`` through the thread-local
+    job description; no label may outlive its stage on the calling thread."""
+    sc = spark.sparkContext
+    sc.setJobDescription(None)
+    run_pipeline(spark, sf_dir)
+    assert sc.getLocalProperty("spark.job.description") is None
+
+
 def test_fuzzy_canonical_pipeline_matches_oracle(spark, sf_dir):
     """North-rule canonicalization path (MinHash-LSH blocking → jaccard
     verify → CC): the corpus emits near-miss surfaces, so the fuzzy tier
