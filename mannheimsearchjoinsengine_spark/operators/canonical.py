@@ -177,10 +177,14 @@ def connected_components(
         driver_max_edges = CC_DRIVER_MAX_EDGES
     all_string = all(f.dataType.simpleString() == "string" for f in e.schema.fields)
     if 0 < n_edges <= driver_max_edges and all_string:
+        import pyarrow as pa
+
         comp = _cc_driver([(r["src"], r["dst"]) for r in e.collect()])
-        return e.sparkSession.createDataFrame(
-            sorted(comp.items()), schema="node string, component string"
-        )
+        nodes = sorted(comp)
+        # from an Arrow table the rows go to the JVM as Arrow batches; a
+        # list of tuples would be pickled through a Python-worker job
+        table = pa.table({"node": nodes, "component": [comp[n] for n in nodes]})
+        return e.sparkSession.createDataFrame(table, schema="node string, component string")
     converged = n_edges == 0
     for _ in range(max_iter):
         if converged:

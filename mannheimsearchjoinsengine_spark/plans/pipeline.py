@@ -181,7 +181,7 @@ def run_pipeline(
                 stage,
                 "clusters",
                 lambda: fuzzy_clusters(
-                    facts, lsh_verified_pairs(facts.select("subj_norm")).localCheckpoint()
+                    facts, lsh_verified_pairs(facts.select("subj_norm"))
                 ).select("subj_norm", "canonical_label"),
             )
         else:

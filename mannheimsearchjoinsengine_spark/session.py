@@ -19,6 +19,13 @@ Design notes for the 100 TB target (local[32] is only the test harness):
   Iceberg when ``spark.sql.catalog.*`` is configured and falls back to
   hive-style partitioned parquet with an explicit manifest otherwise — same
   layout, same partition spec, swap-in deployment config on a real cluster.
+* Local-only defaults a cluster deployment must revisit through the
+  environment: ``SPARK_MAX_PARTITION_BYTES`` (2 MB scan splits; set it back
+  to e.g. 128 MB), ``SPARK_PREFER_SMJ`` (``false`` prefers shuffled-hash
+  joins) and ``SPARK_SHJ_LOCAL_THRESHOLD`` (64 MB per-partition hash-build
+  limit, matched to the advisory partition size). A shuffled-hash build
+  side cannot spill, so a cluster that resizes shuffle partitions must
+  revisit both join settings or risk OOM where sort-merge would spill.
 """
 
 from __future__ import annotations
@@ -93,6 +100,16 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", os.environ.get("SPARK_UI", "false"))
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        # Janino-compiled classes live in an LRU cache of this many entries
+        # (default 100). One pipeline build generates 148 distinct classes
+        # at 30k turns with exact canonicalization and about 210 with the
+        # fuzzy tier, and the next build asks for the same classes in the
+        # same order. An LRU smaller than a working set that repeats in
+        # order evicts every class before its next use, so each build in a
+        # session recompiled nearly all of them (about 137 and 206 per build).
+        # 1000 holds the whole set with headroom; the first build in a JVM
+        # still compiles all of it. A static conf: fixed at session start.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     if master.startswith("local"):
         # Executor-side Python needs the package importable when the master

@@ -27,6 +27,7 @@ import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def _footer_rows(out: str) -> list[tuple[int, str, int]]:
@@ -72,8 +73,10 @@ def _write_lineage(path: str, stage: str, part_rows: list[tuple[int, str, int]])
 
 
 class StageLedger:
-    """Stage checkpoint ledger: records (stage → path, fingerprint, metrics)
-    and short-circuits recomputation when the input fingerprint matches."""
+    """Stage checkpoint ledger: records (stage → path, fingerprint, schema,
+    metrics) and short-circuits recomputation when the input fingerprint
+    matches. Stages are read back with their recorded schema, so neither a
+    build nor a resume starts a schema-inference job."""
 
     def __init__(self, spark: SparkSession, root: str):
         import threading
@@ -98,6 +101,9 @@ class StageLedger:
             json.dump(self.entries, f, indent=1)
         os.replace(tmp, self.path)
 
+    def _read(self, out: str, schema: dict) -> DataFrame:
+        return self.spark.read.schema(StructType.fromJson(schema)).parquet(out)
+
     def materialize(
         self,
         stage: str,
@@ -107,10 +113,16 @@ class StageLedger:
     ) -> DataFrame:
         """Return the stage table, building + persisting only when the
         checkpoint is missing or stale. Also writes a per-partition lineage
-        row set (stage, partition_id, rows) next to the data."""
+        row set (stage, partition_id, rows) next to the data. An entry
+        without a recorded schema is stale: the stage is rebuilt."""
         out = os.path.join(self.root, stage)
         ent = self.entries.get(stage)
-        if ent and ent.get("fingerprint") == fingerprint and os.path.exists(out):
+        if (
+            ent
+            and ent.get("fingerprint") == fingerprint
+            and "schema" in ent
+            and os.path.exists(out)
+        ):
             # torn-write guard: only resume when the files on disk still
             # carry the row count recorded at write time (parquet footers,
             # driver-side, no Spark job). A crash between the data write
@@ -122,14 +134,15 @@ class StageLedger:
             except Exception:
                 on_disk = None
             if on_disk == ent.get("rows"):
-                return self.spark.read.parquet(out)
+                return self._read(out, ent["schema"])
         t0 = time.time()
         df = build()
         writer = df.write.mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(out)
-        persisted = self.spark.read.parquet(out)
+        schema = df.schema.jsonValue()
+        persisted = self._read(out, schema)
         # ZERO-job metrics pass: per-partition row counts come straight from
         # the written files' parquet FOOTERS (driver-side metadata reads,
         # milliseconds) and the lineage table is written driver-side with
@@ -147,6 +160,7 @@ class StageLedger:
                 "fingerprint": fingerprint,
                 "path": out,
                 "rows": rows,
+                "schema": schema,
                 "wall_s": round(time.time() - t0, 3),
                 "finished_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
             }

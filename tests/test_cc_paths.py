@@ -35,6 +35,7 @@ def test_driver_and_distributed_cc_agree(spark, name):
     edges = spark.createDataFrame(GRAPHS[name], schema="src string, dst string")
     fast = connected_components(edges)  # gate engages (tiny edge list)
     slow = connected_components(edges, driver_max_edges=0)  # force star rounds
+    assert fast.schema == slow.schema
     assert sorted(map(tuple, fast.collect())) == sorted(map(tuple, slow.collect()))
 
 

@@ -63,9 +63,29 @@ def test_checkpoint_resume_identical(spark, sf_dir, tmp_path_factory):
         (r.subj, r.pred, r.obj) for r in r2["triples"].select("subj", "pred", "obj").collect()
     )
     assert t1 == t2
+    # stages come back with the schema recorded at write time, the
+    # partition column of the partitioned triples included
+    for name in (
+        "mentions", "cells", "postings", "attributes", "join_results",
+        "pred_merge_map", "resolved", "clusters", "triples",
+    ):
+        assert r2[name].schema == r1[name].schema, name
+    assert "subj_bucket" in r2["triples"].columns
     # lineage rows exist for every stage
     stages = {r.stage for r in r2["lineage"].select("stage").distinct().collect()}
     assert {"cells", "postings", "resolved", "triples"} <= stages
+
+
+def test_second_build_reuses_generated_code(spark, sf_dir, tmp_path):
+    """The codegen cache holds a build's whole working set of generated
+    classes, so a second build in the same session compiles almost none."""
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiles = []
+    for root in ("a", "b"):
+        before = codegen.METRIC_COMPILATION_TIME().getCount()
+        run_pipeline(spark, sf_dir, checkpoint_root=str(tmp_path / root))
+        compiles.append(codegen.METRIC_COMPILATION_TIME().getCount() - before)
+    assert compiles[1] <= 16, compiles
 
 
 def test_run_pipeline_clears_job_description(spark, sf_dir):
@@ -102,10 +122,12 @@ def test_torn_write_forces_clean_rebuild(spark, sf_dir, tmp_path_factory):
     match its ledger entry — or has data but no entry at all — must force a
     clean rebuild with identical output, never a silent short resume.
 
-    Two torn shapes, one per crash window:
+    Two torn shapes, one per crash window, and a stale entry:
     * crash BETWEEN data write and ledger save → files on disk, no entry;
     * damage AFTER a committed write (lost file) → entry present, footer
-      row count disagrees.
+      row count disagrees;
+    * an entry without a recorded schema (written before the ledger kept
+      one) → rebuilt, not read back by inference.
     """
     import glob
     import json
@@ -124,6 +146,8 @@ def test_torn_write_forces_clean_rebuild(spark, sf_dir, tmp_path_factory):
     # shape 1: drop the 'postings' entry but leave (and truncate) its data —
     # the state a kill between writer.parquet() and _save() leaves behind
     del entries["postings"]
+    # shape 3: 'attributes' keeps its entry and data but not its schema
+    del entries["attributes"]["schema"]
     with open(ledger_path, "w") as f:
         json.dump(entries, f)
     victim = sorted(glob.glob(f"{root}/postings/**/*.parquet", recursive=True))[0]
@@ -148,6 +172,8 @@ def test_torn_write_forces_clean_rebuild(spark, sf_dir, tmp_path_factory):
     assert spark.read.parquet(f"{root}/cells").count() == cells_rows
     assert rebuilt["postings"]["rows"] == spark.read.parquet(f"{root}/postings").count()
     assert not os.path.exists(victim) or os.path.getsize(victim) != 8
+    # a rebuild records the schema again; a resume leaves the entry as is
+    assert "schema" in rebuilt["attributes"]
 
 
 def test_pipeline_from_csv_input_identical(spark, sf_dir, tmp_path):
