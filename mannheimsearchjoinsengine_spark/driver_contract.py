@@ -357,7 +357,7 @@ def _canon_cells_ck(spark: SparkSession, sf: str) -> DataFrame:
     FastJoin step precedes schema matching), so typed instance scoring
     aligns on the consolidated key, not the raw surface key."""
     cells = _cells_ck(spark, sf)
-    pairs = fuzzy.lsh_verified_pairs(cells.select("subj_norm")).localCheckpoint()
+    pairs = fuzzy.lsh_verified_pairs(cells.select("subj_norm"))
     comp = canonical.connected_components(
         pairs.select(F.col("left_key").alias("src"), F.col("right_key").alias("dst"))
     )
@@ -1551,7 +1551,7 @@ FROM cells WHERE dtype = 'link'""",
         facts = _facts_ck(spark, sf)
         # the pipeline's default fuzzy tier: MinHash-LSH blocking + exact
         # jaccard verify (NOT the exhaustive token self-join)
-        pairs = fuzzy.lsh_verified_pairs(facts.select("subj_norm")).localCheckpoint()
+        pairs = fuzzy.lsh_verified_pairs(facts.select("subj_norm"))
         return canonical.fuzzy_clusters(facts, pairs)
 
     q(

@@ -105,10 +105,11 @@ def get_spark(
         # at 30k turns with exact canonicalization and about 210 with the
         # fuzzy tier, and the next build asks for the same classes in the
         # same order. An LRU smaller than a working set that repeats in
-        # order evicts every class before its next use, so each build in a
-        # session recompiled nearly all of them (about 137 and 206 per build).
-        # 1000 holds the whole set with headroom; the first build in a JVM
-        # still compiles all of it. A static conf: fixed at session start.
+        # order evicts every class before its next use, so it never hits.
+        # 1000 holds the whole set with headroom. Only a process that runs
+        # several builds in one session gains (a benchmark loop, the test
+        # suite); a one-shot build compiles the whole set either way.
+        # A static conf: fixed at session start.
         .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     if master.startswith("local"):

@@ -63,13 +63,15 @@ def test_checkpoint_resume_identical(spark, sf_dir, tmp_path_factory):
         (r.subj, r.pred, r.obj) for r in r2["triples"].select("subj", "pred", "obj").collect()
     )
     assert t1 == t2
-    # stages come back with the schema recorded at write time, the
-    # partition column of the partitioned triples included
+    # stages come back with the schema recorded at write time, and that
+    # schema is the one the files on disk carry, the partition column of
+    # the partitioned triples included
     for name in (
         "mentions", "cells", "postings", "attributes", "join_results",
         "pred_merge_map", "resolved", "clusters", "triples",
     ):
         assert r2[name].schema == r1[name].schema, name
+        assert r2[name].schema == spark.read.parquet(f"{root}/{name}").schema, name
     assert "subj_bucket" in r2["triples"].columns
     # lineage rows exist for every stage
     stages = {r.stage for r in r2["lineage"].select("stage").distinct().collect()}
