@@ -3,9 +3,12 @@
 The reference emits one N-Triples line per cell with a capitalized,
 space-stripped subject URI (``Triplifier.java:52-61``) and an xsd-typed
 literal object (``addBrackets:129-159``). Spark-native we keep triples
-relational — ``(subj, pred, obj, obj_dtype, conv_id, turn_idx)`` — written
-partitioned by a subject hash bucket (the Iceberg ``bucket(subj)`` spec of
-the north rule), with an N-Triples text projection for parity.
+relational — ``(subj, pred, obj, obj_dtype, subj_bucket)`` — with an
+N-Triples text projection for parity. ``subj_bucket`` is a subject hash
+bucket (the Iceberg ``bucket(subj)`` spec of the north rule): the stage
+ledger checkpoints the table flat, and the published table
+(``catalog.write_table``, ``jobs/run_pipeline.py --output``) is partitioned
+by it.
 """
 
 from __future__ import annotations

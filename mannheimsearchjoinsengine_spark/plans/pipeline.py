@@ -113,7 +113,7 @@ def run_pipeline(
         # fingerprint from the parquet footer — no Spark job for a row count
         fingerprint = f"{sf_dir}:{_input_rows(sf_dir)}" if ledger else ""
 
-    def stage(name: str, build, partition_by=None) -> DataFrame:
+    def stage(name: str, build) -> DataFrame:
         # label the stage's jobs in the Spark UI / REST metrics; the label
         # is thread-local, so clear it before the thread runs anything else
         spark.sparkContext.setJobDescription(f"kg-stage:{name}")
@@ -125,7 +125,7 @@ def run_pipeline(
                 # measured 177 s vs ~90 s at 2M turns for a lazy vs
                 # materialized DAG. The ledger path materializes to parquet.
                 return build().localCheckpoint()
-            return ledger.materialize(name, fingerprint, build, partition_by)
+            return ledger.materialize(name, fingerprint, build)
         finally:
             spark.sparkContext.setJobDescription(None)
 
@@ -214,6 +214,9 @@ def run_pipeline(
         resolved = resolved_f.result()
         clusters = clusters_f.result()
         dtypes = dtypes_f.result()
+        # the checkpoint is flat like every other stage; the subj_bucket
+        # layout is applied when a caller publishes the table
+        # (catalog.write_table, jobs/run_pipeline.py --output)
         triples = stage(
             "triples",
             lambda: to_triples(
@@ -222,7 +225,6 @@ def run_pipeline(
                 dtypes,
                 broadcast_clusters=small("clusters", clusters),
             ),
-            partition_by=["subj_bucket"],
         )
         postings = postings_f.result()
         attributes = attributes_f.result()

@@ -3,17 +3,19 @@
 The reference memoizes stage results as Java-serialized blobs
 (``searchjoin/SearchJoin.saveResults:76-102``,
 ``schemamatching/Matcher.saveSimilarities:53-79``). Here every stage
-boundary is a TABLE: written partitioned, recorded in a JSON ledger with a
-content fingerprint, and reused on re-run when the fingerprint matches —
-which is exactly the north rule's "resumable from checkpoint" contract.
+boundary is a TABLE: written as flat parquet, recorded in a JSON ledger
+with a content fingerprint, and reused on re-run when the fingerprint
+matches — which is exactly the north rule's "resumable from checkpoint"
+contract.
 
 Iceberg note: the north rule targets an Iceberg catalog; this sandbox has no
-Iceberg runtime jar (no network), so INTERNAL stage checkpoints are
-hive-layout partitioned parquet + ledger manifest (partition specs carry
-over unchanged). The pipeline EDGES already speak catalog-table identifiers
+Iceberg runtime jar (no network), so INTERNAL stage checkpoints are flat
+parquet + ledger manifest. Partitioning belongs to the published table: the
+pipeline EDGES already speak catalog-table identifiers
 — ``run_pipeline(input_table="kg.db.transcripts")`` reads via
 ``spark.read.table`` and :func:`write_table` materializes the triple table
-via ``writeTo(...).createOrReplace`` — so on a cluster, configuring
+via ``writeTo(...).createOrReplace``, partitioned by ``subj_bucket`` (the
+``bucket(subj)`` spec) — so on a cluster, configuring
 ``spark.sql.catalog.kg=org.apache.iceberg.spark.SparkCatalog`` and passing
 ``kg.``-qualified identifiers is the whole switch; both call paths are
 pinned locally against ``spark_catalog`` managed tables
@@ -46,6 +48,9 @@ def _footer_rows(out: str) -> list[tuple[int, str, int]]:
         (i, os.path.relpath(f, out), pq.ParquetFile(f).metadata.num_rows)
         for i, f in enumerate(files)
     ]
+
+
+LINEAGE_SCHEMA = "partition_id int, file string, rows_out bigint, stage string"
 
 
 def _write_lineage(path: str, stage: str, part_rows: list[tuple[int, str, int]]) -> None:
@@ -137,7 +142,13 @@ class StageLedger:
                 return self._read(out, ent["schema"])
         t0 = time.time()
         df = build()
-        writer = df.write.mode("overwrite")
+        # no _SUCCESS marker: the ledger entry plus its footer row-count
+        # check is the commit record, and on the local FS every file
+        # written costs a chmod fork (Spark copies writer options into the
+        # write job's Hadoop conf)
+        writer = df.write.mode("overwrite").option(
+            "mapreduce.fileoutputcommitter.marksuccessfuljobs", "false"
+        )
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(out)
@@ -171,17 +182,9 @@ class StageLedger:
         p = os.path.join(self.root, "_lineage")
         if not os.path.exists(p):
             return None
-        # mergeSchema: a resumed ledger short-circuits stages, leaving their
-        # lineage dirs at whatever schema they were written with; without a
-        # merged read Spark samples one footer and can silently null or drop
-        # columns the other dirs carry (ADVICE r03). The 'file' column is
-        # NULL for rows written before it existed.
-        df = self.spark.read.option("mergeSchema", "true").parquet(p + "/*")
-        if "file" not in df.columns:  # all-old-schema roots
-            from pyspark.sql import functions as F
-
-            df = df.withColumn("file", F.lit(None).cast("string"))
-        return df
+        # a fixed schema, not mergeSchema: no footer-merge job, and lineage
+        # dirs written before the 'file' column existed read it as NULL
+        return self.spark.read.schema(LINEAGE_SCHEMA).parquet(p + "/*")
 
 
 def write_table(

@@ -3,6 +3,7 @@ reference oracle, per-turn text equality, checkpoint resume identity."""
 
 from __future__ import annotations
 
+import os
 import shutil
 
 from pyspark.sql import functions as F
@@ -10,6 +11,7 @@ from pyspark.sql import functions as F
 from mannheimsearchjoinsengine_spark.datagen import ensure_transcripts
 from mannheimsearchjoinsengine_spark.plans.pipeline import run_pipeline
 from mannheimsearchjoinsengine_spark.refimpl import oracle
+from mannheimsearchjoinsengine_spark.sources.catalog import StageLedger
 
 
 def test_triples_precision_recall(spark, sf_dir):
@@ -64,18 +66,49 @@ def test_checkpoint_resume_identical(spark, sf_dir, tmp_path_factory):
     )
     assert t1 == t2
     # stages come back with the schema recorded at write time, and that
-    # schema is the one the files on disk carry, the partition column of
-    # the partitioned triples included
+    # schema is the one the files on disk carry
     for name in (
         "mentions", "cells", "postings", "attributes", "join_results",
         "pred_merge_map", "resolved", "clusters", "triples",
     ):
         assert r2[name].schema == r1[name].schema, name
         assert r2[name].schema == spark.read.parquet(f"{root}/{name}").schema, name
-    assert "subj_bucket" in r2["triples"].columns
+        # the ledger entry is the commit record: no _SUCCESS markers
+        assert not os.path.exists(f"{root}/{name}/_SUCCESS"), name
+    # the triples checkpoint is flat; subj_bucket is a plain column that
+    # the publish step partitions by
+    assert not [d for d in os.listdir(f"{root}/triples") if d.startswith("subj_bucket=")]
+    assert r2["triples"].count() > 0
+    assert (
+        r2["triples"]
+        .filter(F.col("subj_bucket") != F.abs(F.hash("subj")) % 64)
+        .count()
+        == 0
+    )
     # lineage rows exist for every stage
     stages = {r.stage for r in r2["lineage"].select("stage").distinct().collect()}
     assert {"cells", "postings", "resolved", "triples"} <= stages
+
+    # a lineage dir written before the 'file' column existed reads back
+    # with its rows and 'file' NULL
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    old = f"{root}/_lineage/old_stage"
+    os.makedirs(old)
+    pq.write_table(
+        pa.table({
+            "partition_id": pa.array([0, 1], pa.int32()),
+            "rows_out": pa.array([5, 7], pa.int64()),
+            "stage": pa.array(["old_stage"] * 2, pa.string()),
+        }),
+        f"{old}/part-00000.parquet",
+    )
+    got = StageLedger(spark, root).lineage().filter(F.col("stage") == "old_stage")
+    assert sorted((r.partition_id, r.file, r.rows_out) for r in got.collect()) == [
+        (0, None, 5),
+        (1, None, 7),
+    ]
 
 
 def test_second_build_reuses_generated_code(spark, sf_dir, tmp_path):
@@ -133,7 +166,6 @@ def test_torn_write_forces_clean_rebuild(spark, sf_dir, tmp_path_factory):
     """
     import glob
     import json
-    import os
 
     root = str(tmp_path_factory.mktemp("ckpt_torn"))
     r1 = run_pipeline(spark, sf_dir, checkpoint_root=root)
@@ -220,6 +252,11 @@ def test_pipeline_catalog_table_io(spark, sf_dir, tmp_path):
         write_table(got, "kgtest.triples", "parquet")
         write_table(got, "kgtest.triples", "parquet")  # replace path is idempotent
         back = spark.read.table("kgtest.triples")
+        # the subj_bucket layout lives in the published table
+        parts = [
+            c.name for c in spark.catalog.listColumns("kgtest.triples") if c.isPartition
+        ]
+        assert parts == ["subj_bucket"]
         assert back.exceptAll(want).count() == 0
         assert want.exceptAll(back).count() == 0
 
