@@ -28,7 +28,8 @@ column + typed attribute columns, SURVEY.md §1; ``model/Table.java:20-34``):
   ``headquarters``/``hq``) exercise schema consolidation
   (``schemamatching/instance/InstanceBasedColumnComparer.java:76-206``).
 * Skew: one hot entity per class appears in ~20% of conversations; the
-  first conversation is extra long — exercises salting paths.
+  first conversation is extra long — exercises the skew handling (df-caps,
+  map-side partial aggregation, AQE skew join).
 
 Turn grammar (THE extraction contract — see operators/extract.py):
 

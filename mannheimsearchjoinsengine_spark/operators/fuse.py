@@ -12,8 +12,9 @@ base-unit conversion (``TableDataCleaner.normalizeColumnUnit:187-210``,
 
 Spark-first shape:
 
-* **J6 row materialization** is ONE equi-join of the (small, broadcast)
-  matched-key set against the fact/cell table — no per-key index fetches.
+* **J6 row materialization** is ONE equi-join of the (small) matched-key
+  set against the fact/cell table — no per-key index fetches; Spark
+  broadcasts the key set while it fits the session threshold.
   The fused table stays **long-format** ``(query_norm, pred, value,
   provenance)``: at 100 TB a wide pivot of unbounded predicates is an
   anti-pattern; pivot only at the end over an explicit predicate list.
@@ -48,33 +49,18 @@ ROW_DENSITY = 0.3  # searchJoins.conf:74 data.rowDensity
 AUGMENT_PREDS = ["population", "area", "founded", "headquarters", "employees"]
 
 
-def fuse_long(
-    mentions: DataFrame,
-    facts: DataFrame,
-    salted: bool = False,
-    n_salts: int = 16,
-) -> DataFrame:
+def fuse_long(mentions: DataFrame, facts: DataFrame) -> DataFrame:
     """J6 — materialize every fact cell of every matched query key.
 
     The query-key set (distinct mention labels) is usually tiny relative to
-    the fact corpus → broadcast hash join, no shuffle of the fact table —
-    but only while the key set fits the session broadcast threshold: call
-    sites gate on a measured label count (``plans/adaptive.fits_broadcast``)
-    and pass ``salted=True`` when it doesn't, scattering hot fact labels
-    over ``n_salts`` sub-keys (identical output, pinned by
-    ``tests/test_pipeline_salted.py``). Column identity keeps full
-    provenance ``(pred_raw, conv_id, turn_idx)`` — the reference's
-    ``colHeader|tablePath|colIdx`` key (``DataFuser.addValuesToColumn:
-    489-556``).
+    the fact corpus, so Spark's planner broadcasts it from its size
+    estimate and the fact table is not shuffled; the join carries no hint.
+    Column identity keeps full provenance ``(pred_raw, conv_id, turn_idx)``
+    — the reference's ``colHeader|tablePath|colIdx`` key
+    (``DataFuser.addValuesToColumn:489-556``).
     """
     keys = mentions.select("subj_norm").distinct()
-    if salted:
-        from mannheimsearchjoinsengine_spark.functions.salting import salted_equi_join
-
-        joined = salted_equi_join(facts, keys, ["subj_norm"], n_salts)
-    else:
-        joined = facts.join(F.broadcast(keys), "subj_norm")
-    return joined.select(
+    return facts.join(keys, "subj_norm").select(
         F.col("subj_norm").alias("query_norm"),
         "pred_raw",
         "obj_raw",
@@ -144,36 +130,22 @@ def column_density(fused: DataFrame, threshold: float = COLUMN_DENSITY) -> DataF
     )
 
 
-def row_density(
-    fused: DataFrame,
-    threshold: float = ROW_DENSITY,
-    broadcast_kept: bool | None = None,
-) -> DataFrame:
+def row_density(fused: DataFrame, threshold: float = ROW_DENSITY) -> DataFrame:
     """P14 (row half) — per-subject predicate density over the kept
     predicates; subjects below ``threshold`` are dropped
     (``TableDataCleaner.java:260-333``).
 
-    ``broadcast_kept``: the kept-predicate list is analytically bounded —
-    per-pred coverages sum to the mean preds-per-subject p̄, so at most
+    The kept-predicate join carries no hint. The list is small — per-pred
+    coverages sum to the mean preds-per-subject p̄, so at most
     p̄/COLUMN_DENSITY predicates can clear the column filter (~10 rows at
-    threshold 0.3) — but under open extraction the predicate space grows,
-    so the hint gets the same measured gate as every pipeline broadcast:
-    ``None`` (default) counts the kept list against the session threshold
-    (confirming the analytic bound at runtime, one tiny job); ``False``
-    skips the hint entirely (AQE still broadcasts at runtime if it
-    measures small); ``True`` forces the hint."""
+    threshold 0.3) — and Spark picks the join strategy from its size
+    estimate."""
     kept = column_density(fused).filter(F.col("kept")).select("pred_raw")
-    if broadcast_kept is None:
-        from mannheimsearchjoinsengine_spark.plans.adaptive import fits_broadcast
-
-        kept = kept.localCheckpoint()
-        broadcast_kept = fits_broadcast(kept.sparkSession, kept.count())
-    kept_side = F.broadcast(kept) if broadcast_kept else kept
     # kept-predicate count as a broadcast scalar (same no-.count() pattern)
     n_kept = kept.agg(F.count("*").alias("n_kept"))
     dens = F.round(F.col("n_preds") / F.col("n_kept"), 4)
     return (
-        fused.join(kept_side, "pred_raw")
+        fused.join(kept, "pred_raw")
         .groupBy("query_norm")
         .agg(F.countDistinct("pred_raw").alias("n_preds"))
         .crossJoin(F.broadcast(n_kept))

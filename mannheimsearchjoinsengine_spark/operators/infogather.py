@@ -213,13 +213,10 @@ def tsp_scores(
     shallow edge-joins.
 
     Join shape per iteration: the score vector is one row per NODE while
-    the edge list is one row per EDGE (orders of magnitude larger), so when
-    the measured node count fits the session broadcast threshold the score
-    side is broadcast-hinted into the edge join — the edge list is then
-    never shuffled by the join at all; the only full-edge exchange left is
-    the map-side-combined groupBy(dst). Above the threshold the hint is
-    dropped and the join shuffles both sides (AQE re-plans at runtime) —
-    correct at any scale, identical values.
+    the edge list is one row per EDGE (orders of magnitude larger). The
+    edge join carries no hint: Spark picks its strategy, and AQE re-plans
+    it from the score side's runtime size — correct at any scale,
+    identical values.
 
     Materialization (r06): ``beta`` is checkpointed ONCE up front — it
     feeds the node union AND the base join, and its seed subtree (overlap
@@ -227,11 +224,7 @@ def tsp_scores(
     re-evaluated by every consumer in the r05 shape (the nodes checkpoint,
     the base checkpoint, and the broadcast(total) subquery each ran it).
     The node set itself is NOT separately checkpointed — ``base`` has the
-    same rows (the left join preserves nodes) and is materialized anyway,
-    so the broadcast gate counts ``base`` (a cached-blocks job, no
-    recompute — ADVICE r05)."""
-    from mannheimsearchjoinsengine_spark.plans.adaptive import fits_broadcast
-
+    same rows (the left join preserves nodes) and is materialized anyway."""
     beta = beta.localCheckpoint()
     nodes = (
         edges.select(F.col("src").alias("conv_id"))
@@ -242,12 +235,11 @@ def tsp_scores(
     base = nodes.join(beta, "conv_id", "left").select(
         "conv_id", F.coalesce("beta", F.lit(0.0)).alias("beta")
     ).localCheckpoint()
-    bcast_score = fits_broadcast(base.sparkSession, base.count())
     score = base.select("conv_id", F.col("beta").alias("score"))
     for i in range(iterations):
         s = score.withColumnRenamed("conv_id", "src")
         inflow = (
-            edges.join(F.broadcast(s) if bcast_score else s, "src")
+            edges.join(s, "src")
             .groupBy(F.col("dst").alias("conv_id"))
             .agg(F.sum(F.col("w") * F.col("score")).alias("acc"))
         )

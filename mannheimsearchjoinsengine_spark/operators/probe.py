@@ -16,8 +16,9 @@ check — the reference's "exact-equality post-filter after stopword strip"
 
 Scale design:
 * the query side (distinct mention labels) is orders of magnitude smaller
-  than postings → broadcast it; the probe is then a broadcast hash join with
-  NO shuffle of the posting table.
+  than postings, so Spark's planner broadcasts it from its size estimate;
+  the probe is then a broadcast hash join with NO shuffle of the posting
+  table.
 * hot tokens were already df-capped at index build; residual skew is handled
   by AQE skew-join when the query side outgrows broadcast size.
 * top-k is `row_number` per query label — the reference's adaptive-deepening
@@ -33,31 +34,14 @@ from pyspark.sql import functions as F
 from mannheimsearchjoinsengine_spark.functions.normalize import norm_tokens
 
 
-def probe(
-    mentions: DataFrame,
-    postings: DataFrame,
-    top_k: int = 5,
-    salted: bool | None = None,
-    n_salts: int = 16,
-) -> DataFrame:
+def probe(mentions: DataFrame, postings: DataFrame, top_k: int = 5) -> DataFrame:
     """J1/J3 — for each distinct query label, top-k candidate labels by
     matched-token count. Returns
     (query_norm, cand_norm, matched_tokens, n_query_tokens, is_exact, rank).
 
-    ``salted=True`` is the scale path for when the query table itself is
-    web-scale (too big to broadcast) and token frequencies are skewed: the
-    posting side scatters each hot token over ``n_salts`` sub-keys and the
-    query side replicates onto them (functions/salting.py) — the hot
-    token's join work spreads over n_salts reducers instead of one.
-    Results are identical (equivalence-tested).
-
-    ``salted=None`` (the default) decides from a MEASURED count of the
-    exploded query side against the session broadcast threshold
-    (plans/adaptive.fits_broadcast) — the same gate the pipeline applies to
-    join_results from its stage ledger. An unconditional ``F.broadcast(q)``
-    hint would force a driver OOM once the mention-label set outgrows the
-    threshold; the measurement costs one localCheckpoint of a relation the
-    broadcast branch had to materialize anyway.
+    The query ⋈ postings join carries no hint: Spark broadcasts the query
+    side when its size estimate fits the session threshold, and otherwise
+    shuffles both sides, where AQE's skew join splits a hot token.
     """
     # n_query_tokens rides along the explode (size of the token array) —
     # no separate count-agg + re-join (two exchanges saved vs the naive
@@ -71,20 +55,9 @@ def probe(
             F.explode("toks").alias("token"),
         )
     )
-    if salted is None:
-        from mannheimsearchjoinsengine_spark.plans.adaptive import fits_broadcast
-
-        q = q.localCheckpoint()
-        salted = not fits_broadcast(q.sparkSession, q.count())
     cand = postings.select("token", F.col("subj_norm").alias("cand_norm")).distinct()
-    if salted:
-        from mannheimsearchjoinsengine_spark.functions.salting import salted_equi_join
-
-        joined = salted_equi_join(cand, q, ["token"], n_salts)
-    else:
-        joined = F.broadcast(q).join(cand, "token")
     hits = (
-        joined
+        q.join(cand, "token")
         .groupBy("query_norm", "n_query_tokens", "cand_norm")
         .agg(F.count("*").alias("matched_tokens"))
         .withColumn(
@@ -101,13 +74,7 @@ def probe(
     )
 
 
-def join_results(
-    mentions: DataFrame,
-    facts: DataFrame,
-    top_n: int = 100,
-    salted: bool | None = None,
-    n_salts: int = 16,
-) -> DataFrame:
+def join_results(mentions: DataFrame, facts: DataFrame, top_n: int = 100) -> DataFrame:
     """J5 — JoinResult aggregation per (query label, candidate conversation):
     matched-key count, summed multiplicities, joinSize = Σ multL·multR
     (``SearchJoin.java:762-852``; ``model/JoinResult.java:30-70``), ranked
@@ -116,30 +83,14 @@ def join_results(
     Left side = mention labels with their multiplicity; right side = fact
     labels per conversation. Exact-label equi-join on subj_norm (the
     reference's post-normalization equality; fuzzy variant in fuzzy.py).
-    The left aggregate (distinct labels) is broadcast only while it fits —
-    the pipeline gates on its stage-ledger row counts (free parquet-footer
-    metadata) and passes ``salted`` explicitly; every other call site gets
-    the default ``salted=None``, which gates on a measured count of the
-    left aggregate itself (``plans/adaptive.fits_broadcast``).
-    ``salted=True`` is the web-scale fallback: hot fact labels scatter over
-    ``n_salts`` sub-keys, identical output (pinned by
-    ``tests/test_pipeline_salted.py``).
+    The join carries no hint: Spark broadcasts the left aggregate (distinct
+    labels) while its size estimate fits the session threshold, and
+    otherwise shuffles both sides under AQE's skew join.
     """
     left = mentions.groupBy("subj_norm").agg(F.count("*").alias("mult_l"))
-    if salted is None:
-        from mannheimsearchjoinsengine_spark.plans.adaptive import fits_broadcast
-
-        left = left.localCheckpoint()
-        salted = not fits_broadcast(left.sparkSession, left.count())
     right = facts.groupBy("subj_norm", "conv_id").agg(F.count("*").alias("mult_r"))
-    if salted:
-        from mannheimsearchjoinsengine_spark.functions.salting import salted_equi_join
-
-        joined = salted_equi_join(right, left, ["subj_norm"], n_salts)
-    else:
-        joined = F.broadcast(left).join(right, "subj_norm")
     jr = (
-        joined
+        left.join(right, "subj_norm")
         .groupBy("conv_id")
         .agg(
             F.count("*").alias("matched_keys"),

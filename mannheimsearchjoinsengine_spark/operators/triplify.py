@@ -34,28 +34,26 @@ def uri_ify(col: Column) -> Column:
     return F.regexp_replace(F.initcap(col), r"\s+", "")
 
 
-def to_triples(
-    resolved: DataFrame,
-    clusters: DataFrame,
-    dtypes: DataFrame,
-    broadcast_clusters: bool = True,
-) -> DataFrame:
+def to_triples(resolved: DataFrame, clusters: DataFrame, dtypes: DataFrame) -> DataFrame:
     """Join resolved facts to canonical labels + dtype and emit the triple
     table. `resolved`: (subj_norm, pred_canon, obj_resolved);
     `clusters`: (subj_norm, canonical_label); `dtypes`: (pred_canon,
     dtype_major).
 
     ``dtypes`` is predicate-cardinality (schema-bounded) → always
-    broadcast. ``clusters`` is one row per distinct SUBJECT — unbounded at
-    web scale — so its hint is gated by the caller (run_pipeline measures
-    the stage row count vs autoBroadcastJoinThreshold); the fallback is a
-    plain shuffle join, which needs no salting here: both sides are
-    aggregated grains (≤ one row per (subj, pred) left, exactly one row
-    per subj right), so no key is hot by construction.
+    broadcast. The hint is needed: on the ledger-less path ``dtypes`` is a
+    localCheckpoint that keeps the size estimate of the aggregation it was
+    cut from (terabytes, for a few dozen rows), and without the hint Spark
+    plans a sort-merge join there.
+    ``clusters`` is one row per distinct SUBJECT — unbounded at web scale —
+    so its join carries no hint and Spark picks the strategy from its size
+    estimate. A shuffled join needs no skew handling here: both sides are
+    aggregated grains (≤ one row per (subj, pred) left, exactly one row per
+    subj right), so no key is hot by construction.
     """
     c = clusters.select("subj_norm", "canonical_label")
     t = (
-        resolved.join(F.broadcast(c) if broadcast_clusters else c, "subj_norm")
+        resolved.join(c, "subj_norm")
         .join(F.broadcast(dtypes), "pred_canon")
         .select(
             F.col("canonical_label").alias("subj"),

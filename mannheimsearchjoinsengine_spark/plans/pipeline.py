@@ -14,10 +14,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from mannheimsearchjoinsengine_spark.operators.canonical import exact_clusters
-from mannheimsearchjoinsengine_spark.plans.adaptive import fits_broadcast
 from mannheimsearchjoinsengine_spark.operators.extract import extract_facts, extract_mentions
 from mannheimsearchjoinsengine_spark.operators.index import build_attributes, build_postings
 from mannheimsearchjoinsengine_spark.operators.match import pred_merge_map
@@ -28,13 +26,18 @@ from mannheimsearchjoinsengine_spark.operators.triplify import to_triples
 from mannheimsearchjoinsengine_spark.sources.catalog import StageLedger
 from mannheimsearchjoinsengine_spark.sources.transcripts import load_transcripts
 
+# stages materialized at once: 4 ≈ the pipeline DAG's max antichain
+# (postings/attributes/merge_map/clusters after cells); measured at sf0.1:
+# 9.0 s serial → 5.4 s (3 workers: 5.6 s). More workers than independent
+# stages buys nothing.
+STAGE_WORKERS = 4
+
 
 def run_pipeline(
     spark: SparkSession,
     sf_dir: str,
     checkpoint_root: str | None = None,
     fuzzy_canonical: bool = False,
-    broadcast_mode: str = "auto",
     input_path: str | None = None,
     input_format: str | None = None,
     input_table: str | None = None,
@@ -44,15 +47,12 @@ def run_pipeline(
     With ``checkpoint_root`` set, each stage materializes through the ledger
     (kill + re-run resumes from the last completed stage).
 
-    ``broadcast_mode`` gates every small-side broadcast hint in the plan:
-    ``"auto"`` (default) broadcasts only when the side's *measured* row
-    count fits ``spark.sql.autoBroadcastJoinThreshold``
-    (plans/adaptive.fits_broadcast — counts come free from the stage
-    ledger's parquet footers, or one cached-scan count on the
-    localCheckpoint path); ``"force"`` keeps every hint (the pre-gating
-    behavior); ``"never"`` takes the salted/shuffle fallbacks everywhere —
-    the web-scale branch, equivalence-pinned against ``"force"`` by
-    ``tests/test_pipeline_salted.py`` (byte-identical triples).
+    Join strategies are Spark's decision. The key-set joins
+    (``join_results``, ``cells ⋈ pred_merge_map``, ``resolved ⋈ clusters``)
+    carry no hint: the planner broadcasts a side whose size estimate (the
+    parquet size on the ledger path) fits
+    ``spark.sql.autoBroadcastJoinThreshold`` and shuffles both sides
+    otherwise, where AQE's skew join splits a hot key (session.get_spark).
 
     ``fuzzy_canonical=True`` clusters surface forms through the fuzzy tier —
     MinHash-LSH candidate blocking → exact token-Jaccard verify → connected
@@ -63,6 +63,10 @@ def run_pipeline(
     synthetic corpus emits near-miss surfaces (token drops/extensions), so
     the fuzzy tier genuinely merges keys the exact tier cannot; the P/R
     gate for this path runs against the refimpl's identical md5-MinHash.
+    On the ledger path the canonicalization tier is part of the
+    ``clusters`` and ``triples`` keys (the only stages that read it), so an
+    exact build never resumes a fuzzy build's clusters or triples, nor the
+    reverse.
 
     ``input_path`` (with optional ``input_format``) reads the transcript
     table from an arbitrary parquet/csv(.gz)/json location via
@@ -113,7 +117,11 @@ def run_pipeline(
         # fingerprint from the parquet footer — no Spark job for a row count
         fingerprint = f"{sf_dir}:{_input_rows(sf_dir)}" if ledger else ""
 
-    def stage(name: str, build) -> DataFrame:
+    # clusters and triples depend on the canonicalization tier; no other
+    # stage reads it, so only those two carry it in their ledger key
+    tier_fingerprint = f"{fingerprint}:fuzzy" if fuzzy_canonical else fingerprint
+
+    def stage(name: str, build, key: str = fingerprint) -> DataFrame:
         # label the stage's jobs in the Spark UI / REST metrics; the label
         # is thread-local, so clear it before the thread runs anything else
         spark.sparkContext.setJobDescription(f"kg-stage:{name}")
@@ -125,24 +133,9 @@ def run_pipeline(
                 # measured 177 s vs ~90 s at 2M turns for a lazy vs
                 # materialized DAG. The ledger path materializes to parquet.
                 return build().localCheckpoint()
-            return ledger.materialize(name, fingerprint, build)
+            return ledger.materialize(name, key, build)
         finally:
             spark.sparkContext.setJobDescription(None)
-
-    def stage_rows(name: str, df: DataFrame) -> int:
-        # measured size of a materialized stage, for broadcast gating: free
-        # from the ledger (summed parquet footers), else one count over the
-        # localCheckpoint's cached blocks (no-ledger runs are test-scale).
-        if ledger is not None and name in ledger.entries:
-            return int(ledger.entries[name]["rows"])
-        return df.count()
-
-    def small(name: str, df: DataFrame) -> bool:
-        if broadcast_mode == "force":
-            return True
-        if broadcast_mode == "never":
-            return False
-        return fits_broadcast(spark, stage_rows(name, df))
 
     # Independent stages materialize CONCURRENTLY from a small driver
     # thread pool (guide §2.6 overlap: Spark's FIFO scheduler backfills the
@@ -150,17 +143,11 @@ def run_pipeline(
     # left most of the cluster idle during every stage's straggler tail and
     # its write/read-back barrier). Dependencies are expressed as futures;
     # job descriptions are thread-local, so each stage stays labelled.
-    # SPARK_GRAFT_STAGE_WORKERS=1 restores the serial shape (debugging);
-    # stage content, ledger layout, and resume semantics are unchanged —
-    # each stage still writes its own directory, and the ledger serializes
+    # Each stage writes its own directory, and the ledger serializes
     # its bookkeeping under a lock (sources/catalog.py).
     from concurrent.futures import ThreadPoolExecutor
 
-    # 4 ≈ the pipeline DAG's max antichain (postings/attributes/merge_map/
-    # clusters after cells); measured at sf0.1: 9.0 s serial → 5.4 s
-    # (workers=3: 5.6 s). More workers than independent stages buys nothing.
-    workers = int(os.environ.get("SPARK_GRAFT_STAGE_WORKERS", "4"))
-    pool = ThreadPoolExecutor(max_workers=max(1, workers))
+    pool = ThreadPoolExecutor(max_workers=STAGE_WORKERS)
     try:
         # facts and cells are the same rows (cells = facts + dtype column):
         # materialize ONCE as cells, expose facts as a zero-cost projection —
@@ -183,28 +170,16 @@ def run_pipeline(
                 lambda: fuzzy_clusters(
                     facts, lsh_verified_pairs(facts.select("subj_norm"))
                 ).select("subj_norm", "canonical_label"),
+                tier_fingerprint,
             )
         else:
-            clusters_f = pool.submit(stage, "clusters", lambda: exact_clusters(facts))
+            clusters_f = pool.submit(
+                stage, "clusters", lambda: exact_clusters(facts), tier_fingerprint
+            )
         mentions = mentions_f.result()
-        # gate: distinct mention labels ≤ mention rows, so the measured mention
-        # count is a safe upper bound for join_results' broadcast side
-        jr_f = pool.submit(
-            stage,
-            "join_results",
-            lambda: join_results(mentions, facts, salted=not small("mentions", mentions)),
-        )
+        jr_f = pool.submit(stage, "join_results", lambda: join_results(mentions, facts))
         merge_map = merge_map_f.result()
-        # merge_map is one row per distinct raw predicate — schema-bounded in
-        # the reference's world, but open extraction can grow it, so it gets the
-        # same measured gate; the fallback salts pred_raw (hot predicates are
-        # guaranteed at any scale).
-        if small("pred_merge_map", merge_map):
-            cells_canon = cells.join(F.broadcast(merge_map), "pred_raw")
-        else:
-            from mannheimsearchjoinsengine_spark.functions.salting import salted_equi_join
-
-            cells_canon = salted_equi_join(cells, merge_map, ["pred_raw"])
+        cells_canon = cells.join(merge_map, "pred_raw")
         resolved_f = pool.submit(
             stage, "resolved", lambda: resolve_dispatch(cells_canon, ("subj_norm", "pred_canon"))
         )
@@ -218,13 +193,7 @@ def run_pipeline(
         # layout is applied when a caller publishes the table
         # (catalog.write_table, jobs/run_pipeline.py --output)
         triples = stage(
-            "triples",
-            lambda: to_triples(
-                resolved,
-                clusters,
-                dtypes,
-                broadcast_clusters=small("clusters", clusters),
-            ),
+            "triples", lambda: to_triples(resolved, clusters, dtypes), tier_fingerprint
         )
         postings = postings_f.result()
         attributes = attributes_f.result()

@@ -8,8 +8,10 @@ Design notes for the 100 TB target (local[32] is only the test harness):
 
 * AQE on → runtime coalescing of shuffle partitions + skew-join splitting.
   The reference's only skew answer was a backpressure sleep loop
-  (``searchjoin/SearchJoin.java:397-410``); we instead rely on AQE skew
-  handling plus explicit salting in the probe/extract operators.
+  (``searchjoin/SearchJoin.java:397-410``). Here skew is handled by AQE's
+  skew join plus the df-caps on hot tokens and keys (index, dedup,
+  infogather), not by explicit salting; join strategies are left to the
+  planner (``autoBroadcastJoinThreshold`` below).
 * Arrow enabled → all Python kernels are vectorized pandas/Arrow UDFs
   (zero per-row Python, per BASELINE.json).
 * ``spark.sql.shuffle.partitions`` defaults to 2×cores locally; on a real

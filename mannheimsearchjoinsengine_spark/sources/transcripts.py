@@ -7,8 +7,8 @@ parquet produced by :mod:`mannheimsearchjoinsengine_spark.datagen`.
 
 Scale notes: the parquet/Iceberg scan is already split by file/row-group, so
 extraction is a narrow map — no shuffle. A single monster conversation (the
-skew case in FIXTURES.md) only matters to per-``conv_id`` aggregations; those
-operators salt internally.
+skew case in FIXTURES.md) only matters to per-``conv_id`` aggregations; their
+map-side partial aggregation absorbs it.
 """
 
 from __future__ import annotations

@@ -1,3 +1,4 @@
+import contextlib
 import os
 
 import pytest
@@ -13,6 +14,28 @@ def spark():
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()
+
+
+@pytest.fixture
+def spark_conf(spark):
+    """``with spark_conf({key: value, ...}):`` sets session confs for the
+    block and restores the previous values after it."""
+
+    @contextlib.contextmanager
+    def _set(confs: dict):
+        old = {k: spark.conf.get(k, None) for k in confs}
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        try:
+            yield
+        finally:
+            for k, v in old.items():
+                if v is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, v)
+
+    return _set
 
 
 @pytest.fixture(scope="session")

@@ -521,7 +521,8 @@ def test_char_jaccard_golden(spark):
     assert got[2] == 0.0
 
 
-def test_salted_probe_equivalence(spark, sf_dir):
+def test_salted_probe_equivalence(spark, sf_dir, spark_conf):
+    """probe's unhinted join returns the same hits with broadcast disabled."""
     from mannheimsearchjoinsengine_spark.operators.extract import (
         extract_facts,
         extract_mentions,
@@ -535,27 +536,41 @@ def test_salted_probe_equivalence(spark, sf_dir):
     m = extract_mentions(t)
     p = build_postings(facts).localCheckpoint()
     cols = ["query_norm", "cand_norm", "matched_tokens", "n_query_tokens", "is_exact"]
-    a = probe(m, p).select(cols)
-    b = probe(m, p, salted=True, n_salts=7).select(cols)
-    assert a.exceptAll(b).count() == 0
-    assert b.exceptAll(a).count() == 0
+    a = sorted(probe(m, p).select(cols).collect())
+    with spark_conf({"spark.sql.autoBroadcastJoinThreshold": "-1"}):
+        shuffled = probe(m, p).select(cols)
+        b = sorted(shuffled.collect())
+        plan = shuffled._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" not in plan, plan
+    assert a == b
 
 
-def test_salted_join_spreads_hot_key(spark):
-    from mannheimsearchjoinsengine_spark.functions.salting import (
-        add_salt,
-        salted_equi_join,
-    )
-
+def test_aqe_splits_hot_key_join(spark, spark_conf):
+    """Skew in an unbroadcast equi-join is AQE's job: one hot key's shuffle
+    partition is split, and the join still returns every row."""
     big = spark.createDataFrame(
-        [("hot", i) for i in range(1000)] + [("cold", 0)], ["k", "v"]
+        [("hot", i) for i in range(5000)] + [(f"k{i}", i) for i in range(200)],
+        ["k", "v"],
     )
-    small = spark.createDataFrame([("hot", "H"), ("cold", "C")], ["k", "tag"])
-    out = salted_equi_join(big, small, ["k"], n_salts=8)
-    assert out.count() == 1001
-    # hot key actually scatters over multiple salts
-    n_buckets = add_salt(big.filter(F.col("k") == "hot"), 8).select("salt").distinct().count()
-    assert n_buckets > 1
+    small = spark.createDataFrame(
+        [("hot", "H")] + [(f"k{i}", "C") for i in range(200)], ["k", "tag"]
+    )
+    confs = {
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "1k",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "1k",
+        "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "2",
+        "spark.sql.adaptive.coalescePartitions.enabled": "false",
+        "spark.sql.shuffle.partitions": "50",
+    }
+    with spark_conf(confs):
+        out = big.join(small, "k")
+        # AQE's final plan belongs to the QueryExecution the action ran on
+        assert len(out.collect()) == 5200
+        plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan, plan
+    assert "skew=true" in plan, plan
+    assert "BroadcastHashJoin" not in plan, plan
 
 
 def test_ivf_recall_vs_brute_force(spark, sf_dir):

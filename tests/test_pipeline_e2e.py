@@ -152,6 +152,30 @@ def test_fuzzy_canonical_pipeline_matches_oracle(spark, sf_dir):
     assert tp / len(expected) >= 0.95, sorted(expected - got)[:5]
 
 
+def test_exact_build_after_fuzzy_build_on_one_root(spark, sf_dir, tmp_path):
+    """The canonicalization tier is part of the clusters and triples keys:
+    an exact build on a fuzzy build's checkpoint root rebuilds those two
+    stages, reuses the others, and returns the exact oracle's triples."""
+    import json
+
+    path = ensure_transcripts(sf_dir)
+    root = str(tmp_path)
+    run_pipeline(spark, sf_dir, checkpoint_root=root, fuzzy_canonical=True)
+    with open(f"{root}/_ledger.json") as f:
+        fuzzy_entries = json.load(f)
+    got = {
+        (r.subj, r.pred, r.obj, r.obj_dtype)
+        for r in run_pipeline(spark, sf_dir, checkpoint_root=root)["triples"]
+        .select("subj", "pred", "obj", "obj_dtype")
+        .collect()
+    }
+    assert got == oracle.triples(path, fuzzy=False)
+    with open(f"{root}/_ledger.json") as f:
+        exact_entries = json.load(f)
+    rebuilt = {k for k in exact_entries if exact_entries[k] != fuzzy_entries.get(k)}
+    assert rebuilt == {"clusters", "triples"}
+
+
 def test_torn_write_forces_clean_rebuild(spark, sf_dir, tmp_path_factory):
     """Crash contract (r03 directive #7): a checkpoint dir that doesn't
     match its ledger entry — or has data but no entry at all — must force a

@@ -1,24 +1,22 @@
-"""Round-4 scale gates (VERDICT r03 directives 1+2).
+"""Scale behaviour of the joins.
 
 1. The index df-cap must broadcast the tiny HOT-token list into a left-anti
    join — never the O(vocabulary) keep list (plan-shape asserted on the
    explain string, output pinned against the keep-list formula).
-2. The pipeline's broadcast joins are gated; the salted/shuffle fallback
-   (`broadcast_mode="never"`) must produce byte-identical triples through
-   the FULL pipeline.
+2. Join strategies are Spark's: with broadcast disabled
+   (``autoBroadcastJoinThreshold=-1``) the key-set joins, and the whole
+   pipeline, return what they return at the default threshold; and on a
+   ledger build the pipeline's unhinted key-set joins plan as broadcasts.
 """
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from mannheimsearchjoinsengine_spark.operators import probe
 from mannheimsearchjoinsengine_spark.operators.fuse import fuse_long
 from mannheimsearchjoinsengine_spark.operators.index import build_postings
-from mannheimsearchjoinsengine_spark.plans.adaptive import (
-    broadcast_threshold_bytes,
-    fits_broadcast,
-)
 from mannheimsearchjoinsengine_spark.plans.pipeline import run_pipeline
 from mannheimsearchjoinsengine_spark.sources.transcripts import load_transcripts
 from mannheimsearchjoinsengine_spark.operators.extract import (
@@ -69,148 +67,93 @@ def test_index_dfcap_output_matches_keep_list_formula(spark):
     assert _rows(got) == _rows(expected)
 
 
-# --- directive 2: gated broadcasts + salted full-pipeline equivalence --------
+# --- directive 2: Spark's join selection, with and without broadcast ---------
+
+NO_BROADCAST = {"spark.sql.autoBroadcastJoinThreshold": "-1"}
+TRIPLE_COLS = ["subj", "pred", "obj", "obj_dtype"]
 
 
-def test_threshold_parsing(spark):
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        for raw, want in [("10485760b", 10485760), ("10MB", 10 * 1 << 20), ("-1", -1)]:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", raw)
-            assert broadcast_threshold_bytes(spark) == want, raw
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1MB")
-        assert fits_broadcast(spark, 100)
-        assert not fits_broadcast(spark, 10_000_000)
-        assert not fits_broadcast(spark, None)  # no measurement → shuffle path
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        assert not fits_broadcast(spark, 1)  # broadcast disabled
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+def _plan(df) -> str:
+    # before an action on df itself this is the planner's initial plan
+    return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_join_results_salted_equivalence(spark, sf_dir):
+def _inputs(spark, sf_dir):
     t = load_transcripts(spark, sf_dir)
-    m, f = extract_mentions(t).localCheckpoint(), extract_facts(t).localCheckpoint()
-    a = probe.join_results(m, f)
-    b = probe.join_results(m, f, salted=True, n_salts=7)
-    assert _rows(a) == _rows(b)
+    return extract_mentions(t).localCheckpoint(), extract_facts(t).localCheckpoint()
 
 
-def test_fuse_long_salted_equivalence(spark, sf_dir):
-    t = load_transcripts(spark, sf_dir)
-    m, f = extract_mentions(t).localCheckpoint(), extract_facts(t).localCheckpoint()
-    a = fuse_long(m, f)
-    b = fuse_long(m, f, salted=True, n_salts=7)
-    assert _rows(a) == _rows(b)
+def test_join_results_salted_equivalence(spark, sf_dir, spark_conf):
+    m, f = _inputs(spark, sf_dir)
+    want = _rows(probe.join_results(m, f))
+    with spark_conf(NO_BROADCAST):
+        shuffled = probe.join_results(m, f)
+        got = _rows(shuffled)
+        assert "BroadcastHashJoin" not in _plan(shuffled)
+    assert got == want
 
 
-def test_pipeline_salted_branch_identical_triples(spark, sf_dir):
-    """Full pipeline through the web-scale (no-broadcast, salted) branch ==
-    the broadcast branch, byte-identical triples (VERDICT r03 #2 'Done')."""
-    cols = ["subj", "pred", "obj", "obj_dtype"]
-    forced = run_pipeline(spark, sf_dir, broadcast_mode="force")["triples"]
-    never = run_pipeline(spark, sf_dir, broadcast_mode="never")["triples"]
-    assert _rows(forced, cols) == _rows(never, cols)
+def test_fuse_long_salted_equivalence(spark, sf_dir, spark_conf):
+    m, f = _inputs(spark, sf_dir)
+    want = _rows(fuse_long(m, f))
+    with spark_conf(NO_BROADCAST):
+        shuffled = fuse_long(m, f)
+        got = _rows(shuffled)
+        assert "BroadcastHashJoin" not in _plan(shuffled)
+    assert got == want
 
 
-def test_pipeline_auto_gate_uses_measured_rows(spark, sf_dir):
-    """auto == force at test scale (everything fits); and with the
-    threshold floored, auto must flip to the salted branch and still
-    produce identical triples."""
-    cols = ["subj", "pred", "obj", "obj_dtype"]
-    base = _rows(run_pipeline(spark, sf_dir, broadcast_mode="force")["triples"], cols)
-    auto = _rows(run_pipeline(spark, sf_dir)["triples"], cols)
-    assert auto == base
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1b")
-        flipped = _rows(run_pipeline(spark, sf_dir)["triples"], cols)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    assert flipped == base
-
-
-# --- round-5 (VERDICT r04 #5): call-site gates on probe/join_results +
-# --- row_density's kept-list broadcast ---------------------------------------
-
-
-def test_probe_default_gate_flips_to_salted(spark, sf_dir):
-    """probe()'s default salted=None measures the exploded query side: with
-    the threshold floored the gate must pick the salted branch (salt key in
-    the optimized plan, zero forced broadcast hints) and the output must
-    equal the explicit-broadcast branch."""
-    t = load_transcripts(spark, sf_dir)
-    m, f = extract_mentions(t).localCheckpoint(), extract_facts(t).localCheckpoint()
-    p = build_postings(f).localCheckpoint()
-    base = _rows(probe.probe(m, p, salted=False))
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "64b")
-        gated = probe.probe(m, p)
-        plan = gated._jdf.queryExecution().optimizedPlan().toString()
-        assert "salt" in plan, plan
-        assert plan.count("strategy=broadcast") == 0, plan
-        rows = _rows(gated)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    assert rows == base
-    # at test scale under the real threshold the gate picks broadcast
-    plan = probe.probe(m, p)._jdf.queryExecution().optimizedPlan().toString()
-    assert plan.count("strategy=broadcast") >= 1, plan
-
-
-def test_join_results_default_gate_flips_to_salted(spark, sf_dir):
-    t = load_transcripts(spark, sf_dir)
-    m, f = extract_mentions(t).localCheckpoint(), extract_facts(t).localCheckpoint()
-    base = _rows(probe.join_results(m, f, salted=False))
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "64b")
-        gated = probe.join_results(m, f)
-        plan = gated._jdf.queryExecution().optimizedPlan().toString()
-        assert "salt" in plan, plan
-        rows = _rows(gated)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    assert rows == base
-
-
-def test_row_density_gated_kept_broadcast(spark):
+def test_row_density_gated_kept_broadcast(spark, spark_conf):
     from mannheimsearchjoinsengine_spark.operators.fuse import row_density
 
     fused = spark.createDataFrame(
         [(f"s{i}", f"p{i % 3}", "v") for i in range(30)],
         ["query_norm", "pred_raw", "obj_raw"],
     )
-    hinted = row_density(fused, broadcast_kept=True)
-    unhinted = row_density(fused, broadcast_kept=False)
-    n_hint = hinted._jdf.queryExecution().optimizedPlan().toString().count(
-        "strategy=broadcast"
-    )
-    n_nohint = unhinted._jdf.queryExecution().optimizedPlan().toString().count(
-        "strategy=broadcast"
-    )
-    # exactly the kept-list hint disappears; the 1-row scalar broadcasts stay
-    assert n_hint == n_nohint + 1, (n_hint, n_nohint)
-    assert _rows(hinted) == _rows(unhinted)
-    # the measured default gate (None) resolves to the broadcast branch at
-    # this scale and floors to the unhinted branch under a 0-byte threshold.
-    # (the gate's localCheckpoint collapses column_density's subtree, so
-    # hint counts are compared between the two GATED plans, not vs above)
-    gated_normal = row_density(fused)
-    n_normal = gated_normal._jdf.queryExecution().optimizedPlan().toString().count(
-        "strategy=broadcast"
-    )
-    assert _rows(gated_normal) == _rows(hinted)
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1b")
-        floored = row_density(fused)
-        n_floored = floored._jdf.queryExecution().optimizedPlan().toString().count(
-            "strategy=broadcast"
+    want = _rows(row_density(fused))
+    with spark_conf(NO_BROADCAST):
+        shuffled = row_density(fused)
+        got = _rows(shuffled)
+        assert "BroadcastHashJoin" not in _plan(shuffled)
+    assert got == want
+
+
+@pytest.fixture(scope="module")
+def ledger_build(spark, sf_dir, tmp_path_factory):
+    """One ledger build at the default broadcast threshold."""
+    root = str(tmp_path_factory.mktemp("ckpt_joins"))
+    return root, run_pipeline(spark, sf_dir, checkpoint_root=root)
+
+
+def test_pipeline_salted_branch_identical_triples(
+    spark, sf_dir, spark_conf, ledger_build, tmp_path
+):
+    """A ledger build with broadcast disabled (every key-set join shuffled)
+    returns the same triples as one at the default threshold."""
+    want = _rows(ledger_build[1]["triples"], TRIPLE_COLS)
+    with spark_conf(NO_BROADCAST):
+        got = _rows(
+            run_pipeline(spark, sf_dir, checkpoint_root=str(tmp_path))["triples"],
+            TRIPLE_COLS,
         )
-        # exactly the kept-list hint disappears under the floored threshold
-        assert n_floored == n_normal - 1, (n_floored, n_normal)
-        assert _rows(floored) == _rows(hinted)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    assert got == want
+
+
+def test_ledger_build_plans_broadcast_joins(spark, ledger_build):
+    """The pipeline's key-set joins carry no hint; over stages read back
+    from the ledger, Spark's planner still broadcasts every one of them
+    from the parquet sizes, and plans no shuffled or sort-merge join."""
+    from mannheimsearchjoinsengine_spark.operators.triplify import to_triples
+
+    root, r = ledger_build
+    dtypes = spark.read.parquet(f"{root}/pred_dtypes")
+    frames = {
+        "join_results": probe.join_results(r["mentions"], r["facts"]),
+        "cells ⋈ pred_merge_map": r["cells"].join(r["pred_merge_map"], "pred_raw"),
+        "to_triples": to_triples(r["resolved"], r["clusters"], dtypes),
+    }
+    for name, df in frames.items():
+        plan = _plan(df)
+        assert "BroadcastHashJoin" in plan, (name, plan)
+        assert "ShuffledHashJoin" not in plan, (name, plan)
+        assert "SortMergeJoin" not in plan, (name, plan)
