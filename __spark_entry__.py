@@ -26,12 +26,15 @@ def _contract():
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship query: full KG pipeline on sf0.001 → triple table."""
+    """Flagship query: full KG pipeline on sf0.001 → triple table, under
+    the engine's session settings."""
     from mannheimsearchjoinsengine_spark.plans.pipeline import (
         default_checkpoint_root,
         run_pipeline,
     )
+    from mannheimsearchjoinsengine_spark.session import apply_engine_conf
 
+    apply_engine_conf(spark)
     sf_dir = "/root/testdata/sf0.001"
     result = run_pipeline(spark, sf_dir, checkpoint_root=default_checkpoint_root(sf_dir))
     return result["triples"].select("subj", "pred", "obj", "obj_dtype", "subj_bucket")

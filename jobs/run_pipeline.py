@@ -5,6 +5,7 @@ Cluster run (the north-rule deployment shape):
 
     cd /root/repo && zip -qr /tmp/sjspark.zip mannheimsearchjoinsengine_spark
     spark-submit --master <cluster> --py-files /tmp/sjspark.zip \
+        --conf spark.sql.codegen.cache.maxEntries=1000 \
         jobs/run_pipeline.py --sf-dir <input> --checkpoint-root <ckpt> \
         [--fuzzy-canonical] [--output <dir>] \
         [--wordnet-dir /path/to/WordNet/dict \
@@ -16,11 +17,19 @@ with ``--files`` or a mounted path), the job additionally runs the F7
 WordNet label-similarity tier over the extracted predicate vocabulary;
 the lexicon is parsed driver-side and broadcast into the pair scoring.
 
-The session builder only sets SQL confs (AQE, Arrow, splits); master and
-executor topology come from spark-submit. With --checkpoint-root every
-stage materializes through the ledger: kill the job at any stage boundary
-and a re-run resumes from the last completed stage with identical output
-(per-partition lineage rows land under <ckpt>/_lineage/).
+The job applies ``session.ENGINE_CONF`` (AQE, Arrow, the 64 MB broadcast
+threshold, session zone UTC, dynamic partition overwrite) to the session
+spark-submit gives it; a key set with ``--conf`` keeps its value. Master,
+executor topology, shuffle partitions and scan splits come from
+spark-submit. Static settings cannot change on a running session, so the
+engine's go on the submit command as ``--conf`` lines: the codegen cache
+size above holds a build's generated classes, which pays when one session
+runs several builds.
+
+With --checkpoint-root every stage materializes through the ledger: kill
+the job at any stage boundary and a re-run resumes from the last completed
+stage with identical output (per-partition lineage rows land under
+<ckpt>/_lineage/).
 """
 
 from __future__ import annotations
@@ -91,10 +100,10 @@ def main(argv: list[str] | None = None) -> int:
     from pyspark.sql import SparkSession
 
     from mannheimsearchjoinsengine_spark.plans.pipeline import run_pipeline
+    from mannheimsearchjoinsengine_spark.session import apply_engine_conf
 
-    # spark-submit provides master/deploy confs; only attach app-level SQL
-    # confs here (idempotent when the session already exists).
     spark = SparkSession.builder.appName("sjspark-kg-pipeline").getOrCreate()
+    apply_engine_conf(spark)
     spark.sparkContext.setLogLevel("WARN")
 
     t0 = time.time()
@@ -139,7 +148,7 @@ def main(argv: list[str] | None = None) -> int:
     summary = {
         "triples": n,
         "wall_s": round(time.time() - t0, 3),
-        "sf_dir": args.sf_dir,
+        "input": args.input_path or args.input_table or args.sf_dir,
         "resumable": args.checkpoint_root is not None,
     }
     if wn_pairs is not None:

@@ -256,7 +256,9 @@ def resolve_rules(cells: DataFrame, keys=("subj_norm", "pred_canon")) -> DataFra
         )
 
     nums = F.array_sort(F.filter(vals, lambda v: v.num.isNotNull()))
-    epoch = F.unix_timestamp(F.col("last_date.d").cast("timestamp"))
+    # days since the epoch, read without the session zone; long, because
+    # an int times 86400 overflows under ANSI arithmetic
+    epoch = F.unix_date(F.col("last_date.d")).cast("long") * 86400
     return groups.select(
         *keys,
         major["dtype"].alias("dtype_major"),

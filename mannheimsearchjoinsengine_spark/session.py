@@ -1,33 +1,30 @@
-"""SparkSession factory for the engine.
+"""SparkSession settings for the engine.
 
 Replaces the reference's hand-rolled runtime (thread pools, bounded queues,
 1 GB Lucene RAM buffer — ``index/IndexManager.java:132``,
 ``utils/concurrent/Parallel.java:98-190``) with Spark's scheduler + AQE.
 
-Design notes for the 100 TB target (local[32] is only the test harness):
-
-* AQE on → runtime coalescing of shuffle partitions + skew-join splitting.
-  The reference's only skew answer was a backpressure sleep loop
-  (``searchjoin/SearchJoin.java:397-410``). Here skew is handled by AQE's
-  skew join plus the df-caps on hot tokens and keys (index, dedup,
-  infogather), not by explicit salting; join strategies are left to the
-  planner (``autoBroadcastJoinThreshold`` below).
-* Arrow enabled → all Python kernels are vectorized pandas/Arrow UDFs
-  (zero per-row Python, per BASELINE.json).
-* ``spark.sql.shuffle.partitions`` defaults to 2×cores locally; on a real
-  cluster this is overridden by AQE's coalescing from a high initial value.
-* Iceberg: the north rule targets Iceberg tables. The sandbox has no Iceberg
-  runtime jar (no network), so the catalog layer (`sources/catalog.py`) writes
-  Iceberg when ``spark.sql.catalog.*`` is configured and falls back to
-  hive-style partitioned parquet with an explicit manifest otherwise — same
-  layout, same partition spec, swap-in deployment config on a real cluster.
-* Local-only defaults a cluster deployment must revisit through the
-  environment: ``SPARK_MAX_PARTITION_BYTES`` (2 MB scan splits; set it back
-  to e.g. 128 MB), ``SPARK_PREFER_SMJ`` (``false`` prefers shuffled-hash
-  joins) and ``SPARK_SHJ_LOCAL_THRESHOLD`` (64 MB per-partition hash-build
-  limit, matched to the advisory partition size). A shuffled-hash build
-  side cannot spill, so a cluster that resizes shuffle partitions must
-  revisit both join settings or risk OOM where sort-merge would spill.
+* ``ENGINE_CONF``: the runtime SQL settings of every build, whatever the
+  deployment. ``get_spark`` passes them to its builder;
+  ``jobs/run_pipeline.py`` and ``__spark_entry__.entry`` apply them to the
+  session they are given (:func:`apply_engine_conf`). AQE coalesces
+  shuffles and splits skewed joins (the reference's only skew answer was a
+  backpressure sleep loop, ``searchjoin/SearchJoin.java:397-410``), and the
+  planner picks join strategies. Arrow vectorizes every Python kernel. The
+  session zone is UTC: the build reads no zone (the date rule counts days
+  with ``unix_date``), and code that does, such as the streaming reader's
+  TIMESTAMP event time, sees the same instants on every entry point.
+* ``get_spark``'s local-only tuning, which a cluster deployment revisits:
+  master (``SPARK_MASTER``), shuffle partitions
+  (``SPARK_SHUFFLE_PARTITIONS``), 2 MB scan splits
+  (``SPARK_MAX_PARTITION_BYTES``; e.g. 128 MB on a cluster), driver memory
+  (``SPARK_DRIVER_MEM``), UI off, the executor PYTHONPATH pin, the codegen
+  cache size and the shuffled-hash join preference. A shuffled-hash build
+  side cannot spill, so a cluster keeps Spark's sort-merge default.
+* Iceberg: the publish step (``catalog.write_table``, ``--output-table``)
+  creates a catalog table partitioned by ``subj_bucket``: Iceberg on a
+  cluster with the runtime jar, a parquet table in ``spark_catalog`` here.
+  Ledger checkpoints are flat parquet committed by a ledger entry.
 """
 
 from __future__ import annotations
@@ -39,14 +36,33 @@ from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
+# Runtime SQL settings of every build, on every entry point.
+ENGINE_CONF = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
+    "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.sources.partitionOverwriteMode": "dynamic",
+}
+
+
+def apply_engine_conf(spark: SparkSession) -> None:
+    """Set ``ENGINE_CONF`` on a running session. A key the deployment set
+    (``spark-submit --conf``) keeps that value; the others take the list's."""
+    deployed = spark.sparkContext.getConf()
+    for k, v in ENGINE_CONF.items():
+        spark.conf.set(k, deployed.get(k, v))
+
 
 def get_spark(
     app_name: str = "mannheimsearchjoinsengine-spark",
     cores: int | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    """Build (or reuse) a SparkSession tuned for this engine.
+    """Build (or reuse) a SparkSession: ``ENGINE_CONF`` plus local tuning.
 
     ``cores`` controls ``local[n]`` in the sandbox; on a cluster the
     master/executor topology comes from spark-submit and this arg is ignored.
@@ -59,34 +75,24 @@ def get_spark(
     # default for sandbox-scale inputs; SPARK_SHUFFLE_PARTITIONS overrides
     # for larger runs (run_scaling.sh pins one size-appropriate value for
     # BOTH parallelism levels, as a cluster job would).
-    shuffle_partitions = shuffle_partitions or int(
+    shuffle_partitions = int(
         os.environ.get("SPARK_SHUFFLE_PARTITIONS", str(max(cores * 2, 8)))
     )
     master = os.environ.get("SPARK_MASTER", f"local[{cores}]")
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
+        .config(map=ENGINE_CONF)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # Let the planner pick shuffled-hash over sort-merge when the
         # per-partition build side fits (guide §3.1): skips both sort
         # passes. The AQE threshold mirrors the advisory partition size, so
-        # a post-shuffle partition AQE deems healthy is also hash-buildable;
-        # both knobs are env-overridable for cluster deployments where
-        # partitions are sized differently.
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("SPARK_PREFER_SMJ", "false"),
-        )
+        # a post-shuffle partition AQE deems healthy is also hash-buildable.
+        .config("spark.sql.join.preferSortMergeJoin", "false")
         .config(
             "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            os.environ.get("SPARK_SHJ_LOCAL_THRESHOLD", str(64 * 1024 * 1024)),
+            str(64 * 1024 * 1024),
         )
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Local-mode inputs are single ~100-200 MB parquet files; the 128 MB
         # default split would scan them with 1-2 tasks and cap every scan-
         # derived stage at that parallelism. 2 MB splits give every core a
@@ -99,9 +105,7 @@ def get_spark(
             os.environ.get("SPARK_MAX_PARTITION_BYTES", str(2 * 1024 * 1024)),
         )
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", os.environ.get("SPARK_UI", "false"))
-        .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        .config("spark.ui.enabled", "false")
         # Janino-compiled classes live in an LRU cache of this many entries
         # (default 100). One pipeline build generates 148 distinct classes
         # at 30k turns with exact canonicalization and about 210 with the
@@ -127,6 +131,4 @@ def get_spark(
             "spark.executorEnv.PYTHONPATH",
             os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         ).config("spark.pyspark.python", sys.executable)
-    for k, v in (extra_conf or {}).items():
-        builder = builder.config(k, v)
-    return builder.getOrCreate()
+    return builder.config(map=extra_conf or {}).getOrCreate()

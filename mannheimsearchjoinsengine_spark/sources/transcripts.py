@@ -31,8 +31,9 @@ TPCH_TABLES = [
 
 # canonical transcript schema (the north-rule input shape); the streaming
 # file source and the non-parquet readers both pin it explicitly. ts is
-# TimestampNTZ — exactly what datagen's parquet carries (session TZ is
-# pinned UTC, so NTZ≡UTC instants here)
+# TimestampNTZ — exactly what datagen's parquet carries. The build reads it
+# without a zone; code that casts it to TIMESTAMP gets UTC instants, the
+# session zone that session.ENGINE_CONF sets on every entry point
 TRANSCRIPT_SCHEMA = StructType(
     [
         StructField("conv_id", StringType()),

@@ -9,8 +9,7 @@ Two patterns:
 
 * ``run_streaming_extraction`` — file-source stream → ``foreachBatch`` →
   the SAME batch ``extract_facts`` plan (single source of truth for the
-  extraction grammar; ``extract_tool_facts`` uses a per-turn window which
-  streaming forbids outside foreachBatch) → append parquet sink. Trigger
+  extraction grammar) → one idempotent parquet partition per epoch. Trigger
   ``availableNow`` processes the backlog then stops — the batch/stream
   parity test compares the result set to the one-shot batch run.
 * ``windowed_turn_counts`` — event-time tumbling-window counts with a
@@ -34,8 +33,9 @@ from mannheimsearchjoinsengine_spark.operators.extract import extract_facts
 from mannheimsearchjoinsengine_spark.sources.transcripts import TRANSCRIPT_SCHEMA
 
 # Streaming reads ts as TIMESTAMP (not the canonical TIMESTAMP_NTZ):
-# EventTimeWatermark rejects NTZ event-time columns, and the session TZ is
-# pinned UTC so the instant is identical; the parquet file source casts.
+# EventTimeWatermark rejects NTZ event-time columns. The parquet file source
+# casts in the session zone, which session.ENGINE_CONF pins to UTC on every
+# entry point, so the instant equals the NTZ wall time.
 STREAM_SCHEMA = StructType(
     [
         StructField(f.name, TimestampType() if f.name == "ts" else f.dataType)

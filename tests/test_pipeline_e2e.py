@@ -6,6 +6,7 @@ from __future__ import annotations
 import os
 import shutil
 
+import pytest
 from pyspark.sql import functions as F
 
 from mannheimsearchjoinsengine_spark.datagen import ensure_transcripts
@@ -14,14 +15,18 @@ from mannheimsearchjoinsengine_spark.refimpl import oracle
 from mannheimsearchjoinsengine_spark.sources.catalog import StageLedger
 
 
-def test_triples_precision_recall(spark, sf_dir):
+@pytest.mark.parametrize("zone", ["UTC", "America/Los_Angeles"])
+def test_triples_precision_recall(spark, spark_conf, sf_dir, zone):
+    """The triples do not depend on the session time zone (the date rule's
+    epoch seconds are counted in days, not read through a TIMESTAMP)."""
     expected = oracle.triples(ensure_transcripts(sf_dir))
-    got = {
-        (r.subj, r.pred, r.obj, r.obj_dtype)
-        for r in run_pipeline(spark, sf_dir)["triples"]
-        .select("subj", "pred", "obj", "obj_dtype")
-        .collect()
-    }
+    with spark_conf({"spark.sql.session.timeZone": zone}):
+        got = {
+            (r.subj, r.pred, r.obj, r.obj_dtype)
+            for r in run_pipeline(spark, sf_dir)["triples"]
+            .select("subj", "pred", "obj", "obj_dtype")
+            .collect()
+        }
     tp = len(got & expected)
     precision = tp / len(got) if got else 0.0
     recall = tp / len(expected) if expected else 0.0
@@ -31,6 +36,35 @@ def test_triples_precision_recall(spark, sf_dir):
     assert recall >= 0.95, (
         f"recall {recall:.3f}; sample oracle-only: {sorted(expected - got)[:5]}"
     )
+
+
+def test_cli_build_from_input_path(spark, spark_conf, sf_dir, tmp_path, capsys):
+    """``jobs/run_pipeline.py`` in-process on a parquet copy of the
+    transcripts: the summary names the path it read, its triple count is
+    the oracle's, and the session it ran on carries ``ENGINE_CONF`` even
+    when the session zone had drifted before the call."""
+    import importlib.util
+    import json
+
+    from mannheimsearchjoinsengine_spark.session import ENGINE_CONF
+
+    spec = importlib.util.spec_from_file_location(
+        "run_pipeline_job",
+        os.path.join(os.path.dirname(__file__), os.pardir, "jobs", "run_pipeline.py"),
+    )
+    job = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(job)
+    transcripts = ensure_transcripts(sf_dir)
+    src = str(tmp_path / "transcripts.parquet")
+    spark.read.parquet(transcripts).write.parquet(src)
+
+    with spark_conf({"spark.sql.session.timeZone": "America/Los_Angeles"}):
+        rc = job.main(["--input-path", src, "--checkpoint-root", str(tmp_path / "ckpt")])
+        assert rc == 0
+        summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+        assert summary["input"] == src
+        assert summary["triples"] == len(oracle.triples(transcripts))
+        assert {k: spark.conf.get(k) for k in ENGINE_CONF} == ENGINE_CONF
 
 
 def test_per_turn_text_equality(spark, sf_dir):
@@ -258,8 +292,6 @@ def test_pipeline_catalog_table_io(spark, sf_dir, tmp_path):
     materialize the triples with writeTo(...).createOrReplace partitioned
     by subj_bucket — the only two call sites that change when
     spark.sql.catalog.* points at Iceberg."""
-    import pytest
-
     from mannheimsearchjoinsengine_spark.sources.transcripts import load_transcripts
 
     spark.sql(f"CREATE DATABASE IF NOT EXISTS kgtest LOCATION '{tmp_path}/wh'")
