@@ -5,7 +5,6 @@ Cluster run (the north-rule deployment shape):
 
     cd /root/repo && zip -qr /tmp/sjspark.zip mannheimsearchjoinsengine_spark
     spark-submit --master <cluster> --py-files /tmp/sjspark.zip \
-        --conf spark.sql.codegen.cache.maxEntries=1000 \
         jobs/run_pipeline.py --sf-dir <input> --checkpoint-root <ckpt> \
         [--fuzzy-canonical] [--output <dir>] \
         [--wordnet-dir /path/to/WordNet/dict \
@@ -18,13 +17,11 @@ WordNet label-similarity tier over the extracted predicate vocabulary;
 the lexicon is parsed driver-side and broadcast into the pair scoring.
 
 The job applies ``session.ENGINE_CONF`` (AQE, Arrow, the 64 MB broadcast
-threshold, session zone UTC, dynamic partition overwrite) to the session
-spark-submit gives it; a key set with ``--conf`` keeps its value. Master,
-executor topology, shuffle partitions and scan splits come from
-spark-submit. Static settings cannot change on a running session, so the
-engine's go on the submit command as ``--conf`` lines: the codegen cache
-size above holds a build's generated classes, which pays when one session
-runs several builds.
+threshold, session zone UTC) to the session spark-submit gives it; a key
+set with ``--conf`` keeps its value. Master, executor topology, shuffle
+partitions and scan splits come from spark-submit. ``--output`` replaces
+the whole directory (static partition overwrite, whatever the session's
+mode), so a re-run to the same path leaves no bucket of an earlier run.
 
 With --checkpoint-root every stage materializes through the ledger: kill
 the job at any stage boundary and a re-run resumes from the last completed
@@ -118,7 +115,12 @@ def main(argv: list[str] | None = None) -> int:
     )
     triples = result["triples"]
     if args.output:
-        triples.write.mode("overwrite").partitionBy("subj_bucket").parquet(args.output)
+        (
+            triples.write.mode("overwrite")
+            .option("partitionOverwriteMode", "static")
+            .partitionBy("subj_bucket")
+            .parquet(args.output)
+        )
     if args.output_table:
         from mannheimsearchjoinsengine_spark.sources.catalog import write_table
 

@@ -11,16 +11,15 @@ Replaces the reference's hand-rolled runtime (thread pools, bounded queues,
   shuffles and splits skewed joins (the reference's only skew answer was a
   backpressure sleep loop, ``searchjoin/SearchJoin.java:397-410``), and the
   planner picks join strategies. Arrow vectorizes every Python kernel. The
-  session zone is UTC: the build reads no zone (the date rule counts days
-  with ``unix_date``), and code that does, such as the streaming reader's
-  TIMESTAMP event time, sees the same instants on every entry point.
+  zone is UTC; the build reads none (dates count days with ``unix_date``).
 * ``get_spark``'s local-only tuning, which a cluster deployment revisits:
   master (``SPARK_MASTER``), shuffle partitions
   (``SPARK_SHUFFLE_PARTITIONS``), 2 MB scan splits
   (``SPARK_MAX_PARTITION_BYTES``; e.g. 128 MB on a cluster), driver memory
   (``SPARK_DRIVER_MEM``), UI off, the executor PYTHONPATH pin, the codegen
-  cache size and the shuffled-hash join preference. A shuffled-hash build
-  side cannot spill, so a cluster keeps Spark's sort-merge default.
+  cache size, dynamic partition overwrite (each partitioned write sets
+  its own mode) and the shuffled-hash join preference. A shuffled-hash
+  build side cannot spill, so a cluster keeps Spark's sort-merge default.
 * Iceberg: the publish step (``catalog.write_table``, ``--output-table``)
   creates a catalog table partitioned by ``subj_bucket``: Iceberg on a
   cluster with the runtime jar, a parquet table in ``spark_catalog`` here.
@@ -45,7 +44,6 @@ ENGINE_CONF = {
     "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
     "spark.sql.session.timeZone": "UTC",
-    "spark.sql.sources.partitionOverwriteMode": "dynamic",
 }
 
 
@@ -106,6 +104,7 @@ def get_spark(
         )
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         # Janino-compiled classes live in an LRU cache of this many entries
         # (default 100). One pipeline build generates 148 distinct classes
         # at 30k turns with exact canonicalization and about 210 with the

@@ -32,8 +32,9 @@ TPCH_TABLES = [
 # canonical transcript schema (the north-rule input shape); the streaming
 # file source and the non-parquet readers both pin it explicitly. ts is
 # TimestampNTZ — exactly what datagen's parquet carries. The build reads it
-# without a zone; code that casts it to TIMESTAMP gets UTC instants, the
-# session zone that session.ENGINE_CONF sets on every entry point
+# without a zone; code that casts it to TIMESTAMP reads the session zone,
+# which session.ENGINE_CONF pins to UTC on get_spark sessions and in the
+# two batch entry points (jobs/run_pipeline.py, __spark_entry__.entry)
 TRANSCRIPT_SCHEMA = StructType(
     [
         StructField("conv_id", StringType()),

@@ -34,8 +34,10 @@ from mannheimsearchjoinsengine_spark.sources.transcripts import TRANSCRIPT_SCHEM
 
 # Streaming reads ts as TIMESTAMP (not the canonical TIMESTAMP_NTZ):
 # EventTimeWatermark rejects NTZ event-time columns. The parquet file source
-# casts in the session zone, which session.ENGINE_CONF pins to UTC on every
-# entry point, so the instant equals the NTZ wall time.
+# casts in the session zone. session.ENGINE_CONF pins it to UTC on get_spark
+# sessions and in the two batch entry points; these functions take the
+# caller's session as it is, so the instant equals the NTZ wall time only
+# on a UTC session (on another, the watermark and windows shift with it).
 STREAM_SCHEMA = StructType(
     [
         StructField(f.name, TimestampType() if f.name == "ts" else f.dataType)

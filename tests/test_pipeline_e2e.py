@@ -42,7 +42,10 @@ def test_cli_build_from_input_path(spark, spark_conf, sf_dir, tmp_path, capsys):
     """``jobs/run_pipeline.py`` in-process on a parquet copy of the
     transcripts: the summary names the path it read, its triple count is
     the oracle's, and the session it ran on carries ``ENGINE_CONF`` even
-    when the session zone had drifted before the call."""
+    when the session zone had drifted before the call. A second run on a
+    subset of the input to the same ``--output`` replaces the directory:
+    no bucket of the first run survives it, on a session whose partition
+    overwrite mode is dynamic."""
     import importlib.util
     import json
 
@@ -55,16 +58,40 @@ def test_cli_build_from_input_path(spark, spark_conf, sf_dir, tmp_path, capsys):
     job = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(job)
     transcripts = ensure_transcripts(sf_dir)
-    src = str(tmp_path / "transcripts.parquet")
+    src, sub = str(tmp_path / "transcripts.parquet"), str(tmp_path / "subset.parquet")
+    out = str(tmp_path / "triples")
     spark.read.parquet(transcripts).write.parquet(src)
+    convs = spark.read.parquet(src).select("conv_id").distinct().orderBy("conv_id").limit(5)
+    spark.read.parquet(src).join(convs, "conv_id").write.parquet(sub)
 
-    with spark_conf({"spark.sql.session.timeZone": "America/Los_Angeles"}):
-        rc = job.main(["--input-path", src, "--checkpoint-root", str(tmp_path / "ckpt")])
-        assert rc == 0
-        summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    def run(path: str, ckpt: str) -> dict:
+        argv = ["--input-path", path, "--checkpoint-root", str(tmp_path / ckpt)]
+        assert job.main([*argv, "--output", out]) == 0
+        return json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+
+    def buckets() -> set[int]:
+        return {r.subj_bucket for r in spark.read.parquet(out).select("subj_bucket").collect()}
+
+    with spark_conf(
+        {
+            "spark.sql.session.timeZone": "America/Los_Angeles",
+            "spark.sql.sources.partitionOverwriteMode": "dynamic",
+        }
+    ):
+        summary = run(src, "ckpt")
         assert summary["input"] == src
         assert summary["triples"] == len(oracle.triples(transcripts))
         assert {k: spark.conf.get(k) for k in ENGINE_CONF} == ENGINE_CONF
+        first = buckets()
+        summary = run(sub, "ckpt_sub")
+    assert summary["input"] == sub
+    got = {
+        (r.subj, r.pred, r.obj, r.obj_dtype)
+        for r in spark.read.parquet(out).select("subj", "pred", "obj", "obj_dtype").collect()
+    }
+    assert got == oracle.triples(sub) and len(got) == summary["triples"] > 0
+    # the subset leaves buckets of the first run unwritten, so a stale one would show
+    assert buckets() < first
 
 
 def test_per_turn_text_equality(spark, sf_dir):
