@@ -208,8 +208,8 @@ def connected_components(
 
 def fuzzy_clusters(facts: DataFrame, fuzzy_pairs: DataFrame) -> DataFrame:
     """Tier 2: merge exact clusters linked by fuzzy pairs. ``fuzzy_pairs``
-    has (left_key, right_key) over norm keys (from fuzzy.fuzzy_self_pairs or
-    the MinHash-LSH path in dedup.py). Returns
+    has (left_key, right_key) over norm keys (from fuzzy.lsh_verified_pairs,
+    the pipeline's path, or fuzzy.fuzzy_self_pairs). Returns
     (subj_norm, cluster_id, canonical_label)."""
     ex = exact_clusters(facts)
     edges = fuzzy_pairs.select(

@@ -5,32 +5,86 @@ attributes) → search-join (join results) → predicate consolidation →
 conflict resolution → canonicalization → triples.
 
 Mirrors the reference's five-stage lifecycle (SURVEY.md §3.2) as ONE
-declarative DAG with optional stage checkpoints (sources/catalog.py) —
-resumable at every boundary, per-partition lineage recorded.
+declarative DAG (:func:`stages`) with optional stage checkpoints
+(sources/catalog.py) — resumable at every boundary, per-partition lineage
+recorded.
 """
 
 from __future__ import annotations
 
+import functools
+import hashlib
+import importlib
 import os
+import pkgutil
+from collections.abc import Callable
+from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
+from dataclasses import dataclass, field
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
-from mannheimsearchjoinsengine_spark.operators.canonical import exact_clusters
+from mannheimsearchjoinsengine_spark.datagen import ensure_transcripts, sf_tag_of_dir
+from mannheimsearchjoinsengine_spark.operators.canonical import exact_clusters, fuzzy_clusters
 from mannheimsearchjoinsengine_spark.operators.extract import extract_facts, extract_mentions
+from mannheimsearchjoinsengine_spark.operators.fuzzy import lsh_verified_pairs
 from mannheimsearchjoinsengine_spark.operators.index import build_attributes, build_postings
 from mannheimsearchjoinsengine_spark.operators.match import pred_merge_map
 from mannheimsearchjoinsengine_spark.operators.probe import join_results
 from mannheimsearchjoinsengine_spark.operators.profile import majority_dtype, typed_cells
 from mannheimsearchjoinsengine_spark.operators.resolve import resolve_dispatch
 from mannheimsearchjoinsengine_spark.operators.triplify import to_triples
+from mannheimsearchjoinsengine_spark.sources import transcripts as src
 from mannheimsearchjoinsengine_spark.sources.catalog import StageLedger
-from mannheimsearchjoinsengine_spark.sources.transcripts import load_transcripts
 
 # stages materialized at once: 4 ≈ the pipeline DAG's max antichain
 # (postings/attributes/merge_map/clusters after cells); measured at sf0.1:
 # 9.0 s serial → 5.4 s (3 workers: 5.6 s). More workers than independent
 # stages buys nothing.
 STAGE_WORKERS = 4
+
+
+@dataclass(frozen=True)
+class Stage:
+    """One row of the stage graph. ``build`` takes the frames named by
+    ``inputs`` (stage names, or the pseudo-input ``"transcripts"``), in
+    order, and ``params`` as keywords; ``params`` are part of the key."""
+
+    name: str
+    inputs: tuple[str, ...]
+    build: Callable[..., DataFrame]
+    params: dict = field(default_factory=dict)
+
+
+def _clusters(cells: DataFrame, fuzzy: bool) -> DataFrame:
+    facts = cells.drop("dtype")
+    if not fuzzy:
+        return exact_clusters(facts)
+    pairs = lsh_verified_pairs(facts.select("subj_norm"))
+    return fuzzy_clusters(facts, pairs).select("subj_norm", "canonical_label")
+
+
+def stages(fuzzy_canonical: bool = False) -> tuple[Stage, ...]:
+    """The stage graph. cells = facts + a dtype column, so facts are no
+    stage of their own: their readers drop the column. Two materializations of
+    90% identical data were the single biggest fixed cost in the pipeline."""
+    return (
+        Stage("cells", ("transcripts",), lambda t: typed_cells(extract_facts(t))),
+        Stage("mentions", ("transcripts",), extract_mentions),
+        Stage("postings", ("cells",), lambda c: build_postings(c.drop("dtype"))),
+        Stage("attributes", ("cells",), build_attributes),
+        Stage("pred_merge_map", ("cells",), pred_merge_map),
+        Stage("clusters", ("cells",), _clusters, {"fuzzy": fuzzy_canonical}),
+        Stage("join_results", ("mentions", "cells"), lambda m, c: join_results(m, c.drop("dtype"))),
+        Stage("resolved", ("pred_merge_map", "cells"),
+              lambda mm, c: resolve_dispatch(c.join(mm, "pred_raw"))),
+        Stage("pred_dtypes", ("pred_merge_map", "cells"),
+              lambda mm, c: majority_dtype(c.join(mm, "pred_raw"), "pred_canon")),
+        # the checkpoint is flat like every other stage; the subj_bucket
+        # layout is applied when a caller publishes the table
+        # (catalog.write_table, jobs/run_pipeline.py --output)
+        Stage("triples", ("resolved", "clusters", "pred_dtypes"), to_triples),
+    )
 
 
 def run_pipeline(
@@ -45,7 +99,10 @@ def run_pipeline(
     """Run all stages; returns every intermediate plus the triple table.
 
     With ``checkpoint_root`` set, each stage materializes through the ledger
-    (kill + re-run resumes from the last completed stage).
+    (kill + re-run resumes from the last completed stage). A stage's key
+    hashes its name, params and inputs' keys; the root key is the input's
+    fingerprint plus a digest of the package's sources. So a stage resumes
+    only from a build with the same input, params and code.
 
     Join strategies are Spark's decision. The key-set joins
     (``join_results``, ``cells ⋈ pred_merge_map``, ``resolved ⋈ clusters``)
@@ -55,76 +112,28 @@ def run_pipeline(
     otherwise, where AQE's skew join splits a hot key (session.get_spark).
 
     ``fuzzy_canonical=True`` clusters surface forms through the fuzzy tier —
-    MinHash-LSH candidate blocking → exact token-Jaccard verify → connected
-    components (the north rule's canonicalization path). Candidates are
-    bounded per band bucket, so no token-hub quadratics at any scale; the
-    exhaustive token-block join (fuzzy.fuzzy_self_pairs) stays available as
-    the J4/FastJoin parity surface but is NOT on the pipeline path. The
-    synthetic corpus emits near-miss surfaces (token drops/extensions), so
-    the fuzzy tier genuinely merges keys the exact tier cannot; the P/R
-    gate for this path runs against the refimpl's identical md5-MinHash.
-    On the ledger path the canonicalization tier is part of the
-    ``clusters`` and ``triples`` keys (the only stages that read it), so an
-    exact build never resumes a fuzzy build's clusters or triples, nor the
-    reverse.
+    MinHash-LSH candidate blocking (bounded per band bucket) → exact
+    token-Jaccard verify → connected components, checked against the
+    refimpl's identical md5-MinHash. The exhaustive token-block join
+    (fuzzy.fuzzy_self_pairs) is the J4/FastJoin parity surface, NOT this path.
 
-    ``input_path`` (with optional ``input_format``) reads the transcript
-    table from an arbitrary parquet/csv(.gz)/json location via
-    :func:`read_transcript_table` instead of the sf_dir's synthesized
-    parquet; the resume fingerprint then comes from the input files'
-    (size, mtime) signature rather than the parquet footer.
-
-    ``input_table`` reads it from a CATALOG table identifier instead —
-    the Iceberg deployment shape (``spark.read.table("kg.db.transcripts")``
-    against a configured ``spark.sql.catalog.kg``); locally the same call
-    path is pinned against ``spark_catalog`` managed tables. Its resume
-    fingerprint is the identifier + a count — one job at ingest, and on
-    Iceberg a metadata-only one (for snapshot-exact resume semantics use
-    the snapshot id exposed by the catalog instead)."""
+    ``input_path`` (with optional ``input_format``) reads the transcripts
+    from a parquet/csv(.gz)/json location via :func:`read_transcript_table`
+    instead of the sf_dir's synthesized parquet. ``input_table`` reads a
+    CATALOG table identifier — the Iceberg deployment shape
+    (``spark.read.table("kg.db.transcripts")``), pinned locally against
+    ``spark_catalog`` managed tables."""
     ledger = StageLedger(spark, checkpoint_root) if checkpoint_root else None
-    if input_table is not None and input_path is not None:
-        raise ValueError("pass input_table OR input_path, not both")
-    if input_table is not None:
-        from mannheimsearchjoinsengine_spark.sources.transcripts import (
-            REQUIRED_COLUMNS,
-        )
+    transcripts, fingerprint = _source(spark, sf_dir, input_path, input_format, input_table)
+    sc = spark.sparkContext
 
-        transcripts = spark.read.table(input_table)
-        missing = [c for c in REQUIRED_COLUMNS if c not in transcripts.columns]
-        if missing:
-            raise ValueError(f"table {input_table!r} lacks columns {missing}")
-        # identifier + schema + count: catches schema evolution and
-        # cardinality changes; a same-count in-place rewrite is NOT caught —
-        # that exactness needs the catalog's snapshot id (see docstring)
-        if ledger:
-            import hashlib
-
-            sch = hashlib.md5(
-                transcripts.schema.simpleString().encode()
-            ).hexdigest()[:12]
-            fingerprint = f"{input_table}:{sch}:{transcripts.count()}"
-        else:
-            fingerprint = ""
-    elif input_path is not None:
-        from mannheimsearchjoinsengine_spark.sources.transcripts import (
-            read_transcript_table,
-        )
-
-        transcripts = read_transcript_table(spark, input_path, input_format)
-        fingerprint = f"{input_path}:{_path_signature(input_path)}" if ledger else ""
-    else:
-        transcripts = load_transcripts(spark, sf_dir)
-        # fingerprint from the parquet footer — no Spark job for a row count
-        fingerprint = f"{sf_dir}:{_input_rows(sf_dir)}" if ledger else ""
-
-    # clusters and triples depend on the canonicalization tier; no other
-    # stage reads it, so only those two carry it in their ledger key
-    tier_fingerprint = f"{fingerprint}:fuzzy" if fuzzy_canonical else fingerprint
-
-    def stage(name: str, build, key: str = fingerprint) -> DataFrame:
-        # label the stage's jobs in the Spark UI / REST metrics; the label
-        # is thread-local, so clear it before the thread runs anything else
-        spark.sparkContext.setJobDescription(f"kg-stage:{name}")
+    def run(s: Stage, key: str, *frames: DataFrame) -> DataFrame:
+        # the description labels the stage's jobs in the Spark UI / event
+        # log, the tag lets a failed sibling cancel them; both are
+        # thread-local, so clear them before the thread runs anything else
+        tag = f"kg-stage:{s.name}"
+        sc.setJobDescription(tag)
+        sc.addJobTag(tag)
         try:
             if ledger is None:
                 # Cut lineage at every stage boundary: most stages are read by
@@ -132,97 +141,78 @@ def run_pipeline(
                 # plan tree re-runs the shared upstream subtree per reader —
                 # measured 177 s vs ~90 s at 2M turns for a lazy vs
                 # materialized DAG. The ledger path materializes to parquet.
-                return build().localCheckpoint()
-            return ledger.materialize(name, key, build)
+                return s.build(*frames, **s.params).localCheckpoint()
+            return ledger.materialize(s.name, key, lambda: s.build(*frames, **s.params))
         finally:
-            spark.sparkContext.setJobDescription(None)
+            sc.removeJobTag(tag)
+            sc.setJobDescription(None)
 
     # Independent stages materialize CONCURRENTLY from a small driver
     # thread pool (guide §2.6 overlap: Spark's FIFO scheduler backfills the
     # tail of one stage's job with tasks from the next — the serial shape
     # left most of the cluster idle during every stage's straggler tail and
-    # its write/read-back barrier). Dependencies are expressed as futures;
-    # job descriptions are thread-local, so each stage stays labelled.
-    # Each stage writes its own directory, and the ledger serializes
-    # its bookkeeping under a lock (sources/catalog.py).
-    from concurrent.futures import ThreadPoolExecutor
-
+    # its write/read-back barrier). A stage is submitted once its inputs are
+    # done; only this thread waits, so no worker blocks on another. Stages
+    # write their own directories; the ledger locks its bookkeeping.
+    done = {"transcripts": transcripts}
+    keys = {"transcripts": f"{fingerprint()}:{_code_digest()}" if ledger else ""}
+    pending, running = list(stages(fuzzy_canonical)), {}
     pool = ThreadPoolExecutor(max_workers=STAGE_WORKERS)
     try:
-        # facts and cells are the same rows (cells = facts + dtype column):
-        # materialize ONCE as cells, expose facts as a zero-cost projection —
-        # two separate stage materializations of 90% identical data were the
-        # single biggest fixed cost in the pipeline.
-        cells_f = pool.submit(stage, "cells", lambda: typed_cells(extract_facts(transcripts)))
-        mentions_f = pool.submit(stage, "mentions", lambda: extract_mentions(transcripts))
-        cells = cells_f.result()
-        facts = cells.drop("dtype")
-        postings_f = pool.submit(stage, "postings", lambda: build_postings(facts))
-        attributes_f = pool.submit(stage, "attributes", lambda: build_attributes(cells))
-        merge_map_f = pool.submit(stage, "pred_merge_map", lambda: pred_merge_map(cells))
-        if fuzzy_canonical:
-            from mannheimsearchjoinsengine_spark.operators.canonical import fuzzy_clusters
-            from mannheimsearchjoinsengine_spark.operators.fuzzy import lsh_verified_pairs
-
-            clusters_f = pool.submit(
-                stage,
-                "clusters",
-                lambda: fuzzy_clusters(
-                    facts, lsh_verified_pairs(facts.select("subj_norm"))
-                ).select("subj_norm", "canonical_label"),
-                tier_fingerprint,
-            )
-        else:
-            clusters_f = pool.submit(
-                stage, "clusters", lambda: exact_clusters(facts), tier_fingerprint
-            )
-        mentions = mentions_f.result()
-        jr_f = pool.submit(stage, "join_results", lambda: join_results(mentions, facts))
-        merge_map = merge_map_f.result()
-        cells_canon = cells.join(merge_map, "pred_raw")
-        resolved_f = pool.submit(
-            stage, "resolved", lambda: resolve_dispatch(cells_canon, ("subj_norm", "pred_canon"))
-        )
-        dtypes_f = pool.submit(
-            stage, "pred_dtypes", lambda: majority_dtype(cells_canon, "pred_canon")
-        )
-        resolved = resolved_f.result()
-        clusters = clusters_f.result()
-        dtypes = dtypes_f.result()
-        # the checkpoint is flat like every other stage; the subj_bucket
-        # layout is applied when a caller publishes the table
-        # (catalog.write_table, jobs/run_pipeline.py --output)
-        triples = stage(
-            "triples", lambda: to_triples(resolved, clusters, dtypes), tier_fingerprint
-        )
-        postings = postings_f.result()
-        attributes = attributes_f.result()
-        jr = jr_f.result()
+        while pending or running:
+            for s in [s for s in pending if all(i in done for i in s.inputs)]:
+                pending.remove(s)
+                spec = (s.name, sorted(s.params.items()), [keys[i] for i in s.inputs])
+                keys[s.name] = hashlib.md5(repr(spec).encode()).hexdigest()
+                running[pool.submit(run, s, keys[s.name], *(done[i] for i in s.inputs))] = s
+            finished, _ = wait(running, return_when=FIRST_COMPLETED)
+            for f in finished:
+                done[running.pop(f).name] = f.result()
+    except BaseException:
+        # a failed stage stops its siblings: running ones lose their Spark
+        # jobs here, queued ones never start (cancel_futures)
+        for s in running.values():
+            sc.cancelJobsWithTag(f"kg-stage:{s.name}")
+        raise
     finally:
-        # a failed stage must not let queued sibling stages start
         pool.shutdown(wait=True, cancel_futures=True)
-    return {
-        "transcripts": transcripts,
-        "facts": facts,
-        "mentions": mentions,
-        "cells": cells,
-        "postings": postings,
-        "attributes": attributes,
-        "join_results": jr,
-        "pred_merge_map": merge_map,
-        "resolved": resolved,
-        "clusters": clusters,
-        "triples": triples,
-        "lineage": ledger.lineage() if ledger else None,
-    }
+    return {**done, "facts": done["cells"].drop("dtype"), "lineage": ledger and ledger.lineage()}
 
 
-def _input_rows(sf_dir: str) -> int:
-    import pyarrow.parquet as pq
+@functools.cache
+def _code_digest() -> str:
+    """md5 over the package's module sources (files or a --py-files zip)."""
+    pkg = importlib.import_module(__name__.split(".")[0])
+    h = hashlib.md5()
+    for m in sorted(pkgutil.walk_packages(pkg.__path__, pkg.__name__ + "."), key=lambda m: m.name):
+        source = m.module_finder.find_spec(m.name).loader.get_source(m.name)
+        h.update(f"{m.name}\n{source}".encode())
+    return h.hexdigest()
 
-    from mannheimsearchjoinsengine_spark.datagen import ensure_transcripts
 
-    return pq.ParquetFile(ensure_transcripts(sf_dir)).metadata.num_rows
+def _source(spark: SparkSession, sf_dir: str, input_path: str | None, input_format: str | None,
+            input_table: str | None) -> tuple[DataFrame, Callable[[], str]]:
+    """The transcript table and a function returning its resume fingerprint,
+    called only on the ledger path: a path's (size, mtime) listing, the
+    sf_dir parquet's footer row count, or a catalog table's identifier,
+    schema and count (one job; exactness needs the snapshot id)."""
+    if input_table is not None and input_path is not None:
+        raise ValueError("pass input_table OR input_path, not both")
+    if input_table is not None:
+        df = spark.read.table(input_table)
+        missing = [c for c in src.REQUIRED_COLUMNS if c not in df.columns]
+        if missing:
+            raise ValueError(f"table {input_table!r} lacks columns {missing}")
+        # catches schema evolution and cardinality changes, NOT a same-count
+        # in-place rewrite
+        schema = hashlib.md5(df.schema.simpleString().encode()).hexdigest()[:12]
+        return df, lambda: f"{input_table}:{schema}:{df.count()}"
+    if input_path is not None:
+        df = src.read_transcript_table(spark, input_path, input_format)
+        return df, lambda: f"{input_path}:{_path_signature(input_path)}"
+    path = ensure_transcripts(sf_dir)
+    # the row count from the parquet footer: no Spark job
+    return spark.read.parquet(path), lambda: f"{sf_dir}:{pq.ParquetFile(path).metadata.num_rows}"
 
 
 def _path_signature(path: str) -> str:
@@ -232,9 +222,6 @@ def _path_signature(path: str) -> str:
     renamed, resized or touched (a sum/max signature missed same-total
     swaps with preserved timestamps). On an object store, swap for the
     listing's etags."""
-    import hashlib
-    import os
-
     files = []
     if os.path.isdir(path):
         for root, _, names in os.walk(path):
@@ -249,6 +236,4 @@ def _path_signature(path: str) -> str:
 
 
 def default_checkpoint_root(sf_dir: str) -> str:
-    from mannheimsearchjoinsengine_spark.datagen import sf_tag_of_dir
-
     return os.path.join("/root/repo/data/checkpoints", sf_tag_of_dir(sf_dir))

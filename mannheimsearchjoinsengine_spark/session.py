@@ -13,8 +13,8 @@ Replaces the reference's hand-rolled runtime (thread pools, bounded queues,
   planner picks join strategies. Arrow vectorizes every Python kernel. The
   zone is UTC; the build reads none (dates count days with ``unix_date``).
 * ``get_spark``'s local-only tuning, which a cluster deployment revisits:
-  master (``SPARK_MASTER``), shuffle partitions
-  (``SPARK_SHUFFLE_PARTITIONS``), 2 MB scan splits
+  master (``SPARK_MASTER``, else spark-submit's, else ``local[cores]``),
+  shuffle partitions (``SPARK_SHUFFLE_PARTITIONS``), 2 MB scan splits
   (``SPARK_MAX_PARTITION_BYTES``; e.g. 128 MB on a cluster), driver memory
   (``SPARK_DRIVER_MEM``), UI off, the executor PYTHONPATH pin, the codegen
   cache size, dynamic partition overwrite (each partitioned write sets
@@ -31,6 +31,7 @@ from __future__ import annotations
 import os
 import sys
 
+from pyspark import SparkConf, SparkContext
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -76,7 +77,14 @@ def get_spark(
     shuffle_partitions = int(
         os.environ.get("SPARK_SHUFFLE_PARTITIONS", str(max(cores * 2, 8)))
     )
-    master = os.environ.get("SPARK_MASTER", f"local[{cores}]")
+    master = os.environ.get("SPARK_MASTER")
+    if not master and "PYSPARK_GATEWAY_PORT" in os.environ:
+        # spark-submit started the driver JVM before this process: keep its
+        # --master. Only a running JVM is asked; starting one here would fix
+        # its heap before the builder's spark.driver.memory reaches it.
+        SparkContext._ensure_initialized()
+        master = SparkConf().get("spark.master", None)
+    master = master or f"local[{cores}]"
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)

@@ -10,7 +10,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from mannheimsearchjoinsengine_spark.datagen import ensure_transcripts
-from mannheimsearchjoinsengine_spark.plans.pipeline import run_pipeline
+from mannheimsearchjoinsengine_spark.plans import pipeline
+from mannheimsearchjoinsengine_spark.plans.pipeline import run_pipeline, stages
 from mannheimsearchjoinsengine_spark.refimpl import oracle
 from mannheimsearchjoinsengine_spark.sources.catalog import StageLedger
 
@@ -185,12 +186,118 @@ def test_second_build_reuses_generated_code(spark, sf_dir, tmp_path):
 
 
 def test_run_pipeline_clears_job_description(spark, sf_dir):
-    """Stages label their jobs ``kg-stage:<name>`` through the thread-local
-    job description; no label may outlive its stage on the calling thread."""
+    """Stages label and tag their jobs ``kg-stage:<name>`` through the
+    thread-local job description and job tags; no label or tag may outlive
+    its stage on the calling thread."""
     sc = spark.sparkContext
     sc.setJobDescription(None)
     run_pipeline(spark, sf_dir)
     assert sc.getLocalProperty("spark.job.description") is None
+    assert not sc.getJobTags()
+
+
+def test_stage_graph_matches_benchmark():
+    """perfbench restates the stage graph: ``STAGE_DEPS`` for the critical
+    path and ``STAGE_LAYER`` for the stages a traced build must span. A
+    stage added to or removed from the table must change both."""
+    from perfbench.run import STAGE_LAYER
+    from perfbench.stats import STAGE_DEPS
+
+    for fuzzy in (False, True):
+        table = stages(fuzzy)
+        deps = {s.name: tuple(i for i in s.inputs if i != "transcripts") for s in table}
+        assert deps == STAGE_DEPS
+        assert set(deps) == set(STAGE_LAYER)
+
+
+def _ledger(root: str) -> dict:
+    import json
+
+    with open(f"{root}/_ledger.json") as f:
+        return json.load(f)
+
+
+def test_resume_rebuilds_after_code_change(spark, sf_dir, tmp_path, monkeypatch):
+    """The root key carries a digest of the package's sources: a rerun with
+    the same code reuses all ten stages, a rerun after a code change
+    rebuilds all ten."""
+    root = str(tmp_path)
+    run_pipeline(spark, sf_dir, checkpoint_root=root)
+    built = _ledger(root)
+    assert set(built) == {s.name for s in stages()}
+    run_pipeline(spark, sf_dir, checkpoint_root=root)
+    assert _ledger(root) == built
+    monkeypatch.setattr(pipeline, "_code_digest", lambda: "edited")
+    run_pipeline(spark, sf_dir, checkpoint_root=root)
+    again = _ledger(root)
+    assert {k for k in again if again[k]["fingerprint"] != built[k]["fingerprint"]} == set(built)
+
+
+def test_code_digest_reads_a_zipped_package(tmp_path):
+    """A cluster deployment ships the package as a ``--py-files`` zip: the
+    source digest read from the zip equals the one read from the files."""
+    import subprocess
+    import sys
+
+    pkg = os.path.dirname(os.path.dirname(os.path.abspath(pipeline.__file__)))
+    archive = shutil.make_archive(
+        str(tmp_path / "pkg"), "zip", os.path.dirname(pkg), os.path.basename(pkg)
+    )
+    code = (
+        "import sys; sys.path.insert(0, sys.argv[1]); "
+        "from mannheimsearchjoinsengine_spark.plans import pipeline; "
+        "print(pipeline.__file__); print(pipeline._code_digest())"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code, archive],
+        cwd=tmp_path, capture_output=True, text=True, check=True, timeout=120,
+    )
+    module_file, digest = out.stdout.split()
+    assert module_file.startswith(archive)
+    assert digest == pipeline._code_digest()
+
+
+def test_failed_stage_cancels_running_siblings(spark, sf_dir, tmp_path, monkeypatch):
+    """A stage that fails while a sibling's Spark job runs: run_pipeline
+    raises the failure once the sibling's job is cancelled (not when it
+    would have finished), the ledger commits neither of them nor
+    ``triples``, and a rerun on the same root returns the oracle's
+    triples."""
+    import time
+
+    flag, sleep_s = str(tmp_path / "sibling_started"), 120
+
+    def stalled(v):
+        open(flag, "w").close()
+        time.sleep(sleep_s)
+        return v
+
+    def slow_merge_map(cells):
+        return cells.limit(1).select(F.udf(stalled, "string")("pred_raw").alias("pred_raw"))
+
+    def failing_attributes(cells):
+        deadline = time.time() + 60
+        while not os.path.exists(flag) and time.time() < deadline:
+            time.sleep(0.1)
+        raise RuntimeError("injected attributes failure")
+
+    root = str(tmp_path / "ckpt")
+    monkeypatch.setattr(pipeline, "pred_merge_map", slow_merge_map)
+    monkeypatch.setattr(pipeline, "build_attributes", failing_attributes)
+    t0 = time.time()
+    with pytest.raises(RuntimeError, match="injected attributes failure"):
+        run_pipeline(spark, sf_dir, checkpoint_root=root)
+    assert os.path.exists(flag)
+    assert time.time() - t0 < sleep_s / 2
+    assert not {"attributes", "pred_merge_map", "triples"} & set(_ledger(root))
+    monkeypatch.undo()
+    got = {
+        (r.subj, r.pred, r.obj, r.obj_dtype)
+        for r in run_pipeline(spark, sf_dir, checkpoint_root=root)["triples"]
+        .select("subj", "pred", "obj", "obj_dtype")
+        .collect()
+    }
+    assert got == oracle.triples(ensure_transcripts(sf_dir))
 
 
 def test_fuzzy_canonical_pipeline_matches_oracle(spark, sf_dir):
@@ -214,16 +321,14 @@ def test_fuzzy_canonical_pipeline_matches_oracle(spark, sf_dir):
 
 
 def test_exact_build_after_fuzzy_build_on_one_root(spark, sf_dir, tmp_path):
-    """The canonicalization tier is part of the clusters and triples keys:
-    an exact build on a fuzzy build's checkpoint root rebuilds those two
-    stages, reuses the others, and returns the exact oracle's triples."""
-    import json
-
+    """The canonicalization tier is a param of ``clusters``, and reaches
+    ``triples`` through the key of its input ``clusters``: an exact build on
+    a fuzzy build's checkpoint root rebuilds those two stages, reuses the
+    others, and returns the exact oracle's triples."""
     path = ensure_transcripts(sf_dir)
     root = str(tmp_path)
     run_pipeline(spark, sf_dir, checkpoint_root=root, fuzzy_canonical=True)
-    with open(f"{root}/_ledger.json") as f:
-        fuzzy_entries = json.load(f)
+    fuzzy_entries = _ledger(root)
     got = {
         (r.subj, r.pred, r.obj, r.obj_dtype)
         for r in run_pipeline(spark, sf_dir, checkpoint_root=root)["triples"]
@@ -231,8 +336,7 @@ def test_exact_build_after_fuzzy_build_on_one_root(spark, sf_dir, tmp_path):
         .collect()
     }
     assert got == oracle.triples(path, fuzzy=False)
-    with open(f"{root}/_ledger.json") as f:
-        exact_entries = json.load(f)
+    exact_entries = _ledger(root)
     rebuilt = {k for k in exact_entries if exact_entries[k] != fuzzy_entries.get(k)}
     assert rebuilt == {"clusters", "triples"}
 

@@ -183,23 +183,25 @@ def test_built_lexicon_drives_label_scores(spark, dict_dir):
     assert got[("continent", "continent")] == 2.2
 
 
-def test_run_pipeline_wordnet_dir_flag(spark, dict_dir, tmp_path, capsys):
+def test_run_pipeline_wordnet_dir_flag(spark, sf_dir, dict_dir, tmp_path, capsys):
     """--wordnet-dir wires the WNDB builder through the spark-submit entry
     point: the summary JSON gains wordnet_pairs and --wordnet-scores-output
     lands a (label1, label2, price, wn_score) parquet."""
+    import importlib.util
     import json
-    import sys
+    import os
 
-    sys.path.insert(0, "/root/repo/jobs")
-    try:
-        import run_pipeline as job
-    finally:
-        sys.path.pop(0)
+    spec = importlib.util.spec_from_file_location(
+        "run_pipeline_job",
+        os.path.join(os.path.dirname(__file__), os.pardir, "jobs", "run_pipeline.py"),
+    )
+    job = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(job)
 
     out = str(tmp_path / "wn_scores")
     rc = job.main(
         [
-            "--sf-dir", "/root/testdata/sf0.001",
+            "--sf-dir", sf_dir,
             "--wordnet-dir", dict_dir,
             "--wordnet-scores-output", out,
         ]
