@@ -4,7 +4,7 @@ The north-rule input is an Iceberg table of multi-turn transcripts
 ``(conv_id, turn_idx, role, text, tool, ts)``.  The driver's testdata dirs
 only ship TPC-H-ish tables, so each scale factor gets a transcript table
 synthesized HERE, deterministically (seed 42, pure stdlib ``random``), and
-cached as parquet under ``/root/repo/data/transcripts/<sf-tag>/``.  Both the
+cached as parquet under ``<checkout>/data/transcripts/<sf-tag>/``.  Both the
 Spark pipeline and the DuckDB oracle SQL read the *same* parquet file, so
 correctness comparisons are exact.
 
@@ -53,7 +53,13 @@ DATAGEN_VERSION = 7  # bump when the grammar changes → regenerates caches
 # Small row groups so Spark can split the single parquet file into many scan
 # tasks (a 1M-row default row group caps scan parallelism at ~2 tasks).
 ROW_GROUP_SIZE = 50_000
-REPO_DATA = os.environ.get("SJSPARK_DATA_DIR", "/root/repo/data/transcripts")
+# the checkout the package was imported from: generated inputs and the
+# default stage ledgers live under its data/ directory
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+if not os.path.isdir(REPO_ROOT):
+    # a --py-files zip has no checkout around it: use the working directory
+    REPO_ROOT = os.getcwd()
+REPO_DATA = os.environ.get("SJSPARK_DATA_DIR", os.path.join(REPO_ROOT, "data", "transcripts"))
 EPOCH = datetime(2026, 1, 1, 0, 0, 0)
 TICK_SECONDS = 37
 

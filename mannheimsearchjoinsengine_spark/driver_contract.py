@@ -114,10 +114,9 @@ def fuzzy_closure_body() -> str:
     """CTE chain ``lbl → … → comp``: the fuzzy tier's oracle twin —
     md5-MinHash signatures (8 hashes, 4 bands of 2) over label tokens, LSH
     band buckets → candidate pairs → exact token-jaccard ≥ 0.5 verify →
-    recursive min-reachability closure. Mirrors
-    canonical.minhash_candidate_pairs + fuzzy.verify_candidate_pairs +
-    canonical.connected_components. Requires a ``facts`` CTE and a
-    WITH RECURSIVE prelude."""
+    recursive min-reachability closure. Mirrors fuzzy.lsh_verified_pairs
+    (the canonical.minhash_lsh_pairs kernel) + canonical.connected_components.
+    Requires a ``facts`` CTE and a WITH RECURSIVE prelude."""
     lsigs = ",\n    ".join(
         f"min(substr(md5('{j}:' || token), 1, 16)) AS sig_{j}" for j in range(8)
     )

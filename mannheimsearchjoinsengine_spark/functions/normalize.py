@@ -58,24 +58,21 @@ def norm_key(col: Column) -> Column:
     match (``index/IndexManager.searchIndex:323-351`` ORs the tokens, so
     token order never mattered there either).
     """
+    # sort_array (codegen) over array_sort (lambda comparator, breaks the
+    # WholeStageCodegen span — visible in .explain)
+    return F.array_join(F.sort_array(norm_tokens(col)), " ")
+
+
+def norm_tokens(col: Column) -> Column:
+    """Token array of the normalized surface (for jaccard / postings):
+    entity-unescape → drop asides → lower → non-alnum→space → split."""
     c = F.lower(col)
     c = F.regexp_replace(c, _ENTITY_RE, " ")
     c = F.regexp_replace(c, _ASIDE_RE, " ")
     c = F.regexp_replace(c, _NONWORD_RE, " ")
     # _NONWORD_RE collapses runs to one space, so a single-space split is
     # exact; array_remove (codegen) beats an interpreted filter-lambda 2.3×
-    # on the 2M-turn bench; sort_array (codegen) over array_sort (lambda
-    # comparator, breaks the WholeStageCodegen span — visible in .explain).
-    toks = F.array_remove(F.split(F.trim(c), " "), "")
-    return F.array_join(F.sort_array(toks), " ")
-
-
-def norm_tokens(col: Column) -> Column:
-    """Token array of the normalized surface (for jaccard / postings)."""
-    c = F.lower(col)
-    c = F.regexp_replace(c, _ENTITY_RE, " ")
-    c = F.regexp_replace(c, _ASIDE_RE, " ")
-    c = F.regexp_replace(c, _NONWORD_RE, " ")
+    # on the 2M-turn bench
     return F.array_remove(F.split(F.trim(c), " "), "")
 
 
@@ -165,20 +162,16 @@ def porter_stem_udf():
 
 def duck_norm_key(expr: str) -> str:
     """DuckDB SQL equivalent of :func:`norm_key` for oracle queries."""
-    c = f"lower({expr})"
-    c = f"regexp_replace({c}, '{_ENTITY_RE}', ' ', 'g')"
-    c = f"regexp_replace({c}, '\\([^)]*\\)|\\[[^\\]]*\\]', ' ', 'g')"
-    c = f"regexp_replace({c}, '[^a-z0-9]+', ' ', 'g')"
-    toks = f"list_filter(string_split(trim({c}), ' '), x -> x <> '')"
     # coalesce: DuckDB's array_to_string([]) is NULL, Spark's array_join([])
     # is '' (hypothesis-found edge; empty surfaces are filtered upstream).
     # The outer CASE keeps NULL input NULL (Spark propagates it) instead of
     # letting the coalesce collapse it to ''.
-    joined = f"coalesce(array_to_string(list_sort({toks}), ' '), '')"
+    joined = f"coalesce(array_to_string(list_sort({duck_norm_tokens(expr)}), ' '), '')"
     return f"(CASE WHEN {expr} IS NULL THEN NULL ELSE {joined} END)"
 
 
 def duck_norm_tokens(expr: str) -> str:
+    """DuckDB SQL equivalent of :func:`norm_tokens`."""
     c = f"lower({expr})"
     c = f"regexp_replace({c}, '{_ENTITY_RE}', ' ', 'g')"
     c = f"regexp_replace({c}, '\\([^)]*\\)|\\[[^\\]]*\\]', ' ', 'g')"

@@ -7,11 +7,18 @@ our canonicalization is two-tier, per the north rule:
 1. EXACT tier — surface variants that normalize to the same key
    (case change / token reorder / asides / noise) collapse by construction
    of `norm_key` (functions/normalize.py). This is a groupBy, no join.
-2. FUZZY tier — MinHash-banded candidate pairs (or the token-jaccard join in
-   fuzzy.py at small scale) feed an iterative-join CONNECTED COMPONENTS
-   (large-star/small-star, Kiveris et al. 2014 "Connected Components in
-   MapReduce and Beyond" semantics) to cluster near-duplicate labels that
-   exact normalization cannot unify.
+2. FUZZY tier — Jaccard-verified MinHash-LSH pairs (fuzzy.lsh_verified_pairs,
+   or the exhaustive token-jaccard join in fuzzy.py) feed an iterative-join
+   CONNECTED COMPONENTS (large-star/small-star, Kiveris et al. 2014
+   "Connected Components in MapReduce and Beyond" semantics) to cluster
+   near-duplicate labels that exact normalization cannot unify.
+
+The MinHash-LSH kernel lives here too, once for every caller: label token
+sets (fuzzy.py) and document shingle sets (dedup.py). ``minhash_profiles``
+(set, size and md5 signature from one groupBy) → ``band_table`` →
+``bucket_pairs`` (hot-bucket cap, band self-join) → ``minhash_lsh_pairs``
+(exact ``array_intersect`` Jaccard verify). SimHash pairing (dedup.py)
+reuses ``band_table`` and ``bucket_pairs``.
 
 The cluster representative (canonical label) is the lexicographic min of
 member display forms — deterministic, oracle-friendly.
@@ -228,21 +235,52 @@ def fuzzy_clusters(facts: DataFrame, fuzzy_pairs: DataFrame) -> DataFrame:
     )
 
 
-def minhash_signatures(labels: DataFrame, col: str = "subj_norm", n_hashes: int = 8) -> DataFrame:
-    """MinHash signatures over label token sets using md5-derived hashes —
-    deterministic and reproducible in any engine (same md5 → same minhash).
-    Returns (label, sig_0..sig_{n-1}) as 16-hex-char strings (lexicographic
-    min == numeric min for fixed-width lowercase hex)."""
-    toks = labels.select(
-        F.col(col).alias("label"), F.explode(norm_tokens(F.col(col))).alias("token")
-    )
-    aggs = [
-        F.min(F.substring(F.md5(F.concat(F.lit(f"{i}:"), F.col("token"))), 1, 16)).alias(
-            f"sig_{i}"
+# ------------------------------------------------------------ MinHash-LSH
+# One set-similarity kernel for labels (token sets: the fuzzy tier,
+# fuzzy.lsh_verified_pairs) and documents (word-shingle sets: dedup.py).
+# Every frame below keys its rows by an ``id`` column; a pair is emitted
+# once, as (id1, id2) with id1 < id2.
+
+
+def minhash_profiles(elems: DataFrame, n_hashes: int = 8) -> DataFrame:
+    """One row per ``id`` of an ``(id, elem)`` table, from ONE groupBy: the
+    distinct element set ``elems`` (an array, order unspecified), its size
+    ``n_elems`` and the MinHash signature ``sig_0..sig_{n-1}``, where sig_j
+    is the min over the elements of the first 16 hex chars of
+    md5(j || ':' || elem). md5 makes the signature reproducible in any
+    engine (the DuckDB twins and ``refimpl.oracle`` compute the same), and
+    for fixed-width lowercase hex the lexicographic min is the numeric min.
+    Duplicate elements change nothing."""
+    sigs = [
+        F.min(F.substring(F.md5(F.concat(F.lit(f"{j}:"), F.col("elem"))), 1, 16)).alias(
+            f"sig_{j}"
         )
-        for i in range(n_hashes)
+        for j in range(n_hashes)
     ]
-    return toks.groupBy("label").agg(*aggs)
+    return (
+        elems.groupBy("id")
+        .agg(F.collect_set("elem").alias("elems"), *sigs)
+        .withColumn("n_elems", F.size("elems"))
+    )
+
+
+def minhash_buckets(n_hashes: int = 8, band_size: int = 2) -> list:
+    """The bucket of each LSH band over a signature table: band b joins
+    sig_{b*band_size} .. sig_{b*band_size + band_size - 1} with '|'."""
+    return [
+        F.concat_ws("|", *[F.col(f"sig_{b * band_size + j}") for j in range(band_size)])
+        for b in range(n_hashes // band_size)
+    ]
+
+
+def band_table(rows: DataFrame, buckets: list) -> DataFrame:
+    """(id, band, bucket), band b's bucket being the expression
+    ``buckets[b]`` over ``rows``: one explode of a literal struct array, so
+    one pass over ``rows`` instead of a union branch per band."""
+    arr = F.array(
+        *[F.struct(F.lit(b).alias("band"), c.alias("bucket")) for b, c in enumerate(buckets)]
+    )
+    return rows.select("id", F.explode(arr).alias("bb")).select("id", "bb.band", "bb.bucket")
 
 
 # Band buckets LARGER than this are excluded from candidate pairing: a
@@ -270,6 +308,71 @@ def lsh_hot_buckets(bands: DataFrame, max_bucket: int = LSH_MAX_BUCKET) -> DataF
     )
 
 
+def bucket_pairs(bands: DataFrame, max_bucket: int | None = LSH_MAX_BUCKET) -> DataFrame:
+    """Candidate pairs (id1, id2), id1 < id2, distinct: ids that share a
+    (band, bucket) of ``bands``. Buckets larger than ``max_bucket`` are
+    dropped first (see LSH_MAX_BUCKET — the k² pair guard; ``None``
+    disables). The anti-join is deliberately un-hinted: the hot list is
+    corpus-dependent, and the anti-join shuffles on the same (band, bucket)
+    key the self-join needs anyway."""
+    if max_bucket is not None:
+        hot = lsh_hot_buckets(bands, max_bucket).select("band", "bucket")
+        bands = bands.join(hot, ["band", "bucket"], "left_anti")
+    l = bands.select("band", "bucket", F.col("id").alias("id1"))
+    r = bands.select("band", "bucket", F.col("id").alias("id2"))
+    return (
+        l.join(r, ["band", "bucket"])
+        .filter(F.col("id1") < F.col("id2"))
+        .select("id1", "id2")
+        .distinct()
+    )
+
+
+def minhash_lsh_pairs(
+    elems: DataFrame,
+    tau: float = 0.5,
+    n_hashes: int = 8,
+    band_size: int = 2,
+    max_bucket: int | None = LSH_MAX_BUCKET,
+) -> DataFrame:
+    """(id1, id2, shared, jaccard) for the LSH candidate pairs of an
+    ``(id, elem)`` table whose element sets have Jaccard ≥ ``tau``:
+    profiles → bands → bucket pairs → exact verify. ``shared`` is
+    size(array_intersect) of the two distinct element arrays, and jaccard
+    is round(shared / (n1 + n2 − shared), 4), so no join of the exploded
+    (id, elem) table is needed. The profiles are the one materialization
+    (localCheckpoint): the banding and both sides of the verify read them.
+    LSH recall is < 1 against the exhaustive join by construction."""
+    prof = minhash_profiles(elems, n_hashes).localCheckpoint()
+    cand = bucket_pairs(band_table(prof, minhash_buckets(n_hashes, band_size)), max_bucket)
+    p1 = prof.select(
+        F.col("id").alias("id1"), F.col("elems").alias("e1"), F.col("n_elems").alias("n1")
+    )
+    p2 = prof.select(
+        F.col("id").alias("id2"), F.col("elems").alias("e2"), F.col("n_elems").alias("n2")
+    )
+    shared = F.size(F.array_intersect("e1", "e2"))
+    jaccard = F.round(shared / (F.col("n1") + F.col("n2") - shared), 4)
+    return (
+        cand.join(p1, "id1")
+        .join(p2, "id2")
+        .select("id1", "id2", shared.alias("shared"), jaccard.alias("jaccard"))
+        .filter(F.col("jaccard") >= tau)
+    )
+
+
+def label_tokens(labels: DataFrame, col: str = "subj_norm") -> DataFrame:
+    """(id, elem) rows of a label column: each label with its norm_tokens."""
+    return labels.select(F.col(col).alias("id"), F.explode(norm_tokens(F.col(col))).alias("elem"))
+
+
+def minhash_signatures(labels: DataFrame, col: str = "subj_norm", n_hashes: int = 8) -> DataFrame:
+    """(label, sig_0..sig_{n-1}): the MinHash signatures of the label token
+    sets (minhash_profiles)."""
+    prof = minhash_profiles(label_tokens(labels, col), n_hashes)
+    return prof.select(F.col("id").alias("label"), *[f"sig_{j}" for j in range(n_hashes)])
+
+
 def minhash_candidate_pairs(
     labels: DataFrame,
     col: str = "subj_norm",
@@ -277,40 +380,9 @@ def minhash_candidate_pairs(
     band_size: int = 2,
     max_bucket: int | None = LSH_MAX_BUCKET,
 ) -> DataFrame:
-    """LSH banding: labels sharing one band of the signature become candidate
-    pairs (left < right). Verify with exact jaccard downstream (fuzzy.py).
-
-    Buckets larger than ``max_bucket`` are dropped (see LSH_MAX_BUCKET —
-    the k² pair guard; ``None`` disables). The anti-join is deliberately
-    un-hinted: the hot list is corpus-dependent, and the anti-join shuffles
-    on the same (band, bucket) key the self-join needs anyway."""
-    sig = minhash_signatures(labels, col, n_hashes)
-    bands = []
-    for b in range(n_hashes // band_size):
-        cols = [F.col(f"sig_{b * band_size + j}") for j in range(band_size)]
-        bands.append(
-            sig.select(
-                "label",
-                F.lit(b).alias("band"),
-                F.concat_ws("|", *cols).alias("bucket"),
-            )
-        )
-    allb = bands[0]
-    for b in bands[1:]:
-        allb = allb.union(b)
-    if max_bucket is not None:
-        # three consumers below (hot-bucket agg, both self-join sides) —
-        # materialize the signature/union subtree once instead of
-        # recomputing it per branch (ADVICE r05; same discipline as
-        # dedup.minhash_lsh_pairs' profile checkpoint)
-        allb = allb.localCheckpoint()
-        hot = lsh_hot_buckets(allb, max_bucket).select("band", "bucket")
-        allb = allb.join(hot, ["band", "bucket"], "left_anti")
-    l = allb.select("band", "bucket", F.col("label").alias("left_key"))
-    r = allb.select("band", "bucket", F.col("label").alias("right_key"))
-    return (
-        l.join(r, ["band", "bucket"])
-        .filter(F.col("left_key") < F.col("right_key"))
-        .select("left_key", "right_key")
-        .distinct()
-    )
+    """(left_key, right_key), left < right: the labels that share an LSH
+    band bucket, before the Jaccard verify of fuzzy.lsh_verified_pairs.
+    Buckets larger than ``max_bucket`` are dropped (bucket_pairs)."""
+    prof = minhash_profiles(label_tokens(labels, col), n_hashes).localCheckpoint()
+    cand = bucket_pairs(band_table(prof, minhash_buckets(n_hashes, band_size)), max_bucket)
+    return cand.select(F.col("id1").alias("left_key"), F.col("id2").alias("right_key"))

@@ -7,9 +7,10 @@ Design for 100 TB:
 * exact: one hash-groupBy on a 32-byte digest — partial agg map-side.
 * n-gram jaccard: shingle-block join; the shingle explode is the cost and
   hot shingles are df-capped like index tokens.
-* MinHash+LSH: signatures via md5 (engine-reproducible), banded buckets →
-  candidate pairs only within buckets → exact verify. Candidates per bucket
-  are bounded; no all-pairs blowup.
+* MinHash+LSH: canonical.py's MinHash-LSH kernel (the one the fuzzy label
+  tier runs) over shingle sets — md5 signatures (engine-reproducible),
+  banded buckets → candidate pairs only within buckets → exact verify.
+  Candidates per bucket are bounded; no all-pairs blowup.
 * SimHash: signature from per-token md5 bits — near-dups share a
   signature or differ in ≤ hamming_max bits. The driver oracle uses the
   16-bit demo width (keeps the SQL twin tractable); the 64-bit production
@@ -26,9 +27,14 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from mannheimsearchjoinsengine_spark.functions.text import fingerprint
+from mannheimsearchjoinsengine_spark.operators import canonical
 from mannheimsearchjoinsengine_spark.operators.canonical import (
     LSH_MAX_BUCKET,
-    lsh_hot_buckets,
+    band_table,
+    bucket_pairs,
+    connected_components,
+    minhash_buckets,
+    minhash_profiles,
 )
 
 
@@ -73,39 +79,16 @@ def _shingles_of(tk, n: int):
     ).otherwise(F.array().cast("array<string>"))
 
 
+def _shingle_rows(docs: DataFrame, text_col: str, id_col: str, n: int) -> DataFrame:
+    """(doc, shingle) rows: each doc's word n-gram shingles (n=1 → tokens),
+    duplicates kept."""
+    toked = docs.select(F.col(id_col).alias("doc"), _tokens(text_col).alias("tk"))
+    return toked.select("doc", F.explode(_shingles_of(F.col("tk"), n)).alias("shingle"))
+
+
 def _token_sets(docs: DataFrame, text_col: str, id_col: str, n: int = 1) -> DataFrame:
     """Distinct word n-gram shingles per doc (n=1 → token set)."""
-    toked = docs.select(F.col(id_col).alias("doc"), _tokens(text_col).alias("tk"))
-    return (
-        toked.select("doc", F.explode(_shingles_of(F.col("tk"), n)).alias("shingle"))
-        .distinct()
-    )
-
-
-def _doc_profiles(
-    docs: DataFrame, text_col: str, id_col: str, n: int, sig_hashes: int = 0
-) -> DataFrame:
-    """One row per doc: the distinct shingle set as an ARRAY (`sh`,
-    element order unspecified — consumers must be order-free), its size
-    `n_sh`, and optionally the minhash signature mins `sig_0..`.
-
-    ONE groupBy(doc) exchange (collect_set partial-aggregates map-side)
-    replaces the old shape's distinct-exchange on (doc, shingle) PLUS a
-    per-consumer join/aggregate of the exploded set table — the verify
-    stage then intersects the two member arrays per candidate pair
-    (`size(array_intersect(...))` — exact: both arrays are distinct
-    element sets) instead of shuffling/broadcasting the full exploded
-    table twice. Same per-pair work, none of the set-table movement."""
-    toked = docs.select(F.col(id_col).alias("doc"), _tokens(text_col).alias("tk"))
-    raw = toked.select("doc", F.explode(_shingles_of(F.col("tk"), n)).alias("shingle"))
-    aggs = [F.collect_set("shingle").alias("sh")]
-    aggs += [
-        F.min(
-            F.substring(F.md5(F.concat(F.lit(f"{j}:"), F.col("shingle"))), 1, 16)
-        ).alias(f"sig_{j}")
-        for j in range(sig_hashes)
-    ]
-    return raw.groupBy("doc").agg(*aggs).withColumn("n_sh", F.size("sh"))
+    return _shingle_rows(docs, text_col, id_col, n).distinct()
 
 
 def ngram_jaccard_pairs(
@@ -119,7 +102,7 @@ def ngram_jaccard_pairs(
     """Top near-dup pairs by word-n-gram Jaccard (F1 analog at doc scale;
     char n-gram variant of ``InstanceBasedComparer.java:553-560`` is in
     functions/similarity.py). Deterministic top-N by (jaccard desc, ids).
-    ``sets`` feeds three branches → materialize once (see minhash note).
+    ``sets`` feeds three branches → materialize once.
 
     Scale shape: the blocking self-join runs only over shingles whose
     document frequency is ≤ ``floor(df_cap · n_docs) + 1`` (same formula as
@@ -208,34 +191,11 @@ def minhash_bands(
     sets: DataFrame, n_hashes: int = 8, band_size: int = 2
 ) -> DataFrame:
     """(doc, band, bucket) LSH band table over a (doc, shingle) set table —
-    the unit minhash_lsh_pairs pairs on and the surface lsh_hot_buckets
-    meters. Signatures are md5-derived mins (engine-reproducible); banding
-    is one explode of a literal struct array (one pass over ``sig``, not a
-    union branch per band); the result is localCheckpoint-materialized
-    because both sides of the candidate self-join consume it."""
-    aggs = [
-        F.min(
-            F.substring(F.md5(F.concat(F.lit(f"{j}:"), F.col("shingle"))), 1, 16)
-        ).alias(f"sig_{j}")
-        for j in range(n_hashes)
-    ]
-    sig = sets.groupBy("doc").agg(*aggs)
-    band_arr = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.concat_ws(
-                    "|", *[F.col(f"sig_{b * band_size + j}") for j in range(band_size)]
-                ).alias("bucket"),
-            )
-            for b in range(n_hashes // band_size)
-        ]
-    )
-    return (
-        sig.select("doc", F.explode(band_arr).alias("bb"))
-        .select("doc", "bb.band", "bb.bucket")
-        .localCheckpoint()
-    )
+    the surface lsh_hot_buckets meters. The signature and banding are
+    canonical's MinHash kernel (minhash_profiles, band_table), the ones
+    minhash_lsh_pairs pairs on."""
+    prof = minhash_profiles(sets.toDF("id", "elem"), n_hashes)
+    return band_table(prof, minhash_buckets(n_hashes, band_size)).withColumnRenamed("id", "doc")
 
 
 def minhash_lsh_pairs(
@@ -248,85 +208,28 @@ def minhash_lsh_pairs(
     shingle_n: int = 3,
     max_bucket: int | None = LSH_MAX_BUCKET,
 ) -> DataFrame:
-    """MinHash-LSH candidate pairs + exact-jaccard verification.
-
-    Signatures: sig_j = min over word-``shingle_n``-gram shingles of
-    md5(j || ':' || shingle) (first 16 hex chars; lexicographic min ≡
-    numeric min for fixed-width lowercase hex — reproducible in DuckDB for
-    the oracle). Banding with ``n_hashes/band_size`` bands; pairs sharing
-    any band are candidates, then verified with exact shingle-set jaccard
-    ≥ τ.
+    """MinHash-LSH near-dup pairs (doc1, doc2, jaccard), doc1 < doc2: the
+    canonical.minhash_lsh_pairs kernel over word-``shingle_n``-gram shingle
+    sets — md5 signatures, ``n_hashes/band_size`` bands, pairs sharing any
+    band bucket verified with exact shingle-set jaccard ≥ τ (reproducible
+    in DuckDB for the oracle).
 
     Shingles must be n-grams (n ≥ 3), NOT unigrams: over a small
     vocabulary, unigram sets make nearly all documents collide and the pair
     output degenerates to O(n²) — measured 8.5M pairs / 288 s at sf0.1
     before this fix vs bounded output after.
 
-    Plan shape (r06): ONE ``groupBy(doc)`` builds the per-doc profile —
-    shingle-set array + size + all signature mins (`_doc_profiles`) — and
-    is the only materialization (localCheckpoint; a checkpoint table on a
-    real cluster). Banding is an explode of a literal struct array over the
-    profile (one pass, not one union branch per band), and verification is
-    ``size(array_intersect)`` of the two member arrays per candidate pair:
-    exact jaccard (both arrays are distinct sets) with NO join/broadcast of
-    the exploded (doc, shingle) table — the r05 plan shipped that table
-    twice (once per pair side) plus twice more for the size aggregates.
-    (History: the r03 recomputation fix was 98 s → 6 s at sf0.1; this
-    round's array verify takes the same query 4.3 s → ~2.5 s.)
-
     Band buckets larger than ``max_bucket`` are excluded from pairing
     (``None`` disables): honest signatures bound EXPECTED bucket sizes, but
     a boilerplate-degenerate corpus (millions of near-identical documents)
     makes one bucket hold them all and the self-join emits k² rows no
     matter how the rest of the plan is shaped. Dropped buckets surface as
-    ``canonical.lsh_hot_buckets(bands)`` metrics rows — at scale, log that
-    next to the pair output. The DuckDB driver twin mirrors the cap."""
-    profiles = _doc_profiles(
-        docs, text_col, id_col, shingle_n, sig_hashes=n_hashes
-    ).localCheckpoint()
-    band_arr = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.concat_ws(
-                    "|", *[F.col(f"sig_{b * band_size + j}") for j in range(band_size)]
-                ).alias("bucket"),
-            )
-            for b in range(n_hashes // band_size)
-        ]
-    )
-    bands = profiles.select("doc", F.explode(band_arr).alias("bb")).select(
-        "doc", "bb.band", "bb.bucket"
-    )
-    if max_bucket is not None:
-        hot = lsh_hot_buckets(bands, max_bucket).select("band", "bucket")
-        bands = bands.join(hot, ["band", "bucket"], "left_anti")
-    l = bands.select("band", "bucket", F.col("doc").alias("doc1"))
-    r = bands.select("band", "bucket", F.col("doc").alias("doc2"))
-    cand = (
-        l.join(r, ["band", "bucket"])
-        .filter(F.col("doc1") < F.col("doc2"))
-        .select("doc1", "doc2")
-        .distinct()
-    )
-    # verify: exact jaccard via per-pair array intersection of the full sets
-    p1 = profiles.select(
-        F.col("doc").alias("doc1"), F.col("sh").alias("sh1"), F.col("n_sh").alias("n1")
-    )
-    p2 = profiles.select(
-        F.col("doc").alias("doc2"), F.col("sh").alias("sh2"), F.col("n_sh").alias("n2")
-    )
-    shared = F.size(F.array_intersect("sh1", "sh2"))
-    return (
-        cand.join(p1, "doc1")
-        .join(p2, "doc2")
-        .withColumn(
-            "jaccard",
-            F.round(shared / (F.col("n1") + F.col("n2") - shared), 4),
-        )
-        .filter(F.col("jaccard") >= tau)
-        .select("doc1", "doc2", "jaccard")
-    )
+    ``canonical.lsh_hot_buckets(minhash_bands(...))`` metrics rows — at
+    scale, log that next to the pair output. The DuckDB driver twin mirrors
+    the cap."""
+    elems = _shingle_rows(docs, text_col, id_col, shingle_n).toDF("id", "elem")
+    pairs = canonical.minhash_lsh_pairs(elems, tau, n_hashes, band_size, max_bucket)
+    return pairs.select(F.col("id1").alias("doc1"), F.col("id2").alias("doc2"), "jaccard")
 
 
 def near_dup_clusters(
@@ -343,8 +246,6 @@ def near_dup_clusters(
 
     Node ids go through zero-padded strings so the CC min is numeric
     order; output is (doc_id, keeper_id, cluster_size)."""
-    from mannheimsearchjoinsengine_spark.operators.canonical import connected_components
-
     pairs = minhash_lsh_pairs(
         docs, tau=tau, text_col=text_col, id_col=id_col, max_bucket=max_bucket
     )
@@ -428,10 +329,11 @@ def simhash_pairs(
     MinHash banding) and the exact Hamming verify only prunes. Returns
     (doc1, doc2, hamming).
 
-    Scale shape: one self-join per the union'd band table, bucketed on
-    (band, band-bits value); verification is a bit_count over XOR —
-    native codegen, no Python. Degenerate buckets (boilerplate corpora
-    collapse to one signature) get the same ``max_bucket`` drop-cap +
+    Scale shape: the MinHash kernel's band table and bucket pairing
+    (canonical.band_table, canonical.bucket_pairs), bucketed on (band,
+    band-bits value); verification is a bit_count over XOR — native
+    codegen, no Python. Degenerate buckets (boilerplate corpora collapse to
+    one signature) get the same ``max_bucket`` drop-cap +
     ``lsh_hot_buckets`` metrics surface as the MinHash path — with the
     same stated recall tradeoff on pathological clusters.
 
@@ -442,47 +344,24 @@ def simhash_pairs(
     the driver's exhaustive SQL twin tractable, mirroring doc_simhash."""
     if not 0 <= hamming_max < bits:
         raise ValueError(f"hamming_max must be in [0, {bits})")
-    sig = simhash(docs, bits, text_col, id_col).localCheckpoint()
+    sig = simhash(docs, bits, text_col, id_col).withColumnRenamed("doc", "id").localCheckpoint()
     n_bands = hamming_max + 1
     base, rem = divmod(bits, n_bands)
-    starts, s = [], 0
+    buckets, st = [], 0
     for b in range(n_bands):
         w = base + (1 if b < rem else 0)
-        starts.append((s, w))
-        s += w
-    band_arr = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.shiftrightunsigned(F.col("simhash"), st).bitwiseAND(
-                    F.lit((1 << w) - 1 if w < 64 else -1).cast("long")
-                ).alias("bucket"),
-            )
-            for b, (st, w) in enumerate(starts)
-        ]
-    )
-    bands = sig.select(F.col("doc"), F.explode(band_arr).alias("bb")).select(
-        "doc", "bb.band", "bb.bucket"
-    )
-    if max_bucket is not None:
-        hot = lsh_hot_buckets(bands, max_bucket).select("band", "bucket")
-        bands = bands.join(hot, ["band", "bucket"], "left_anti")
-    l = bands.select("band", "bucket", F.col("doc").alias("doc1"))
-    r = bands.select("band", "bucket", F.col("doc").alias("doc2"))
-    cand = (
-        l.join(r, ["band", "bucket"])
-        .filter(F.col("doc1") < F.col("doc2"))
-        .select("doc1", "doc2")
-        .distinct()
-    )
-    s1 = sig.select(F.col("doc").alias("doc1"), F.col("simhash").alias("s1"))
-    s2 = sig.select(F.col("doc").alias("doc2"), F.col("simhash").alias("s2"))
+        mask = F.lit((1 << w) - 1 if w < 64 else -1).cast("long")
+        buckets.append(F.shiftrightunsigned(F.col("simhash"), st).bitwiseAND(mask))
+        st += w
+    cand = bucket_pairs(band_table(sig, buckets), max_bucket)
+    s1 = sig.select(F.col("id").alias("id1"), F.col("simhash").alias("s1"))
+    s2 = sig.select(F.col("id").alias("id2"), F.col("simhash").alias("s2"))
     return (
-        cand.join(s1, "doc1")
-        .join(s2, "doc2")
+        cand.join(s1, "id1")
+        .join(s2, "id2")
         .select(
-            "doc1",
-            "doc2",
+            F.col("id1").alias("doc1"),
+            F.col("id2").alias("doc2"),
             F.bit_count(F.col("s1").bitwiseXOR(F.col("s2"))).alias("hamming"),
         )
         .filter(F.col("hamming") <= hamming_max)

@@ -3,15 +3,20 @@
 The reference shells out to an external FastJoin binary (fuzzy-Jaccard,
 δ=0.8, τ=0.5 — ``utils/FastJoinWrapper.match:137-198``,
 ``searchJoins.conf:56-60``) to consolidate found keys with query keys.
-Spark-native this is a token-block self/两-side join:
+Spark-native there are two pair generators:
 
-    tokens(left) ⋈ tokens(right) on token → groupBy(pair) → jaccard ≥ τ
+* ``token_jaccard_join`` / ``fuzzy_self_pairs`` — the exhaustive token-block
+  join, the J4/FastJoin parity surface:
 
-Blocking on shared tokens means a pair is only scored if it shares ≥1 token
-— exactly FastJoin's signature-based candidate generation. At scale the
-token explode is O(labels × tokens/label); hot tokens are the skew risk, so
-callers should df-cap first (index.build_postings) or use the MinHash-LSH
-path (canonical.py) which bounds candidates per band bucket.
+      tokens(left) ⋈ tokens(right) on token → groupBy(pair) → jaccard ≥ τ
+
+  Blocking on shared tokens means a pair is only scored if it shares ≥1
+  token — exactly FastJoin's signature-based candidate generation. The
+  token explode is O(labels × tokens/label) and hot tokens are the skew
+  risk, so callers should df-cap first (index.build_postings).
+* ``lsh_verified_pairs`` — the pipeline's fuzzy tier: the MinHash-LSH
+  kernel of canonical.py (the one dedup.py uses for documents) over label
+  token sets, which bounds candidates per band bucket.
 """
 
 from __future__ import annotations
@@ -20,6 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from mannheimsearchjoinsengine_spark.functions.normalize import norm_tokens
+from mannheimsearchjoinsengine_spark.operators.canonical import label_tokens, minhash_lsh_pairs
 
 TAU_DEFAULT = 0.5  # fastjoin.tau, searchJoins.conf:58
 
@@ -75,41 +81,20 @@ def fuzzy_self_pairs(labels: DataFrame, tau: float = TAU_DEFAULT, col: str = "su
     return pairs.filter(F.col("left_key") < F.col("right_key"))
 
 
-def verify_candidate_pairs(
-    cand: DataFrame, labels: DataFrame, tau: float = TAU_DEFAULT, col: str = "subj_norm"
-) -> DataFrame:
-    """Exact token-Jaccard verification of a (left_key, right_key) candidate
-    list: join each side to its token SET (array ops, codegen — no explode,
-    no token self-join) and keep pairs with jaccard ≥ τ. The candidate list
-    is blocking-bounded (MinHash bands), so this is a small broadcast join
-    at any scale."""
-    toks = labels.select(col).distinct().select(
-        F.col(col).alias("k"), F.array_distinct(norm_tokens(F.col(col))).alias("tk")
-    )
-    lt = toks.select(F.col("k").alias("left_key"), F.col("tk").alias("lt"))
-    rt = toks.select(F.col("k").alias("right_key"), F.col("tk").alias("rt"))
-    j = cand.join(lt, "left_key").join(rt, "right_key")
-    inter = F.size(F.array_intersect("lt", "rt"))
-    jac = F.round(inter / (F.size("lt") + F.size("rt") - inter), 4)
-    return (
-        j.select("left_key", "right_key", inter.alias("shared_tokens"), jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= tau)
-    )
-
-
 def lsh_verified_pairs(
     labels: DataFrame, tau: float = TAU_DEFAULT, col: str = "subj_norm"
 ) -> DataFrame:
-    """The pipeline's default fuzzy-candidate path (north rule): MinHash-LSH
-    banding bounds candidate generation per band bucket (canonical.
-    minhash_candidate_pairs), then exact token-Jaccard verifies. No token-
-    block self-join anywhere — a token shared by k labels never yields k²
-    rows. LSH recall < 1 vs the exhaustive join by construction; the
-    refimpl oracle replicates the same md5 MinHash so tests are exact."""
-    from mannheimsearchjoinsengine_spark.operators.canonical import (
-        minhash_candidate_pairs,
+    """The pipeline's fuzzy-candidate path (north rule): the MinHash-LSH
+    kernel (canonical.minhash_lsh_pairs) over the labels' token sets.
+    Banding bounds candidate generation per band bucket, then exact
+    token-Jaccard verifies — no token-block self-join anywhere, so a token
+    shared by k labels never yields k² rows. The refimpl oracle replicates
+    the same md5 MinHash, so tests are exact. Returns (left_key, right_key,
+    shared_tokens, jaccard), left < right."""
+    pairs = minhash_lsh_pairs(label_tokens(labels, col), tau)
+    return pairs.select(
+        F.col("id1").alias("left_key"),
+        F.col("id2").alias("right_key"),
+        F.col("shared").alias("shared_tokens"),
+        "jaccard",
     )
-
-    lbl = labels.select(col).distinct().localCheckpoint()
-    cand = minhash_candidate_pairs(lbl, col)
-    return verify_candidate_pairs(cand, lbl, tau, col)

@@ -17,6 +17,7 @@ import hashlib
 import importlib
 import os
 import pkgutil
+import uuid
 from collections.abc import Callable
 from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
@@ -24,7 +25,7 @@ from dataclasses import dataclass, field
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
-from mannheimsearchjoinsengine_spark.datagen import ensure_transcripts, sf_tag_of_dir
+from mannheimsearchjoinsengine_spark.datagen import REPO_ROOT, ensure_transcripts, sf_tag_of_dir
 from mannheimsearchjoinsengine_spark.operators.canonical import exact_clusters, fuzzy_clusters
 from mannheimsearchjoinsengine_spark.operators.extract import extract_facts, extract_mentions
 from mannheimsearchjoinsengine_spark.operators.fuzzy import lsh_verified_pairs
@@ -111,18 +112,21 @@ def run_pipeline(
     ``spark.sql.autoBroadcastJoinThreshold`` and shuffles both sides
     otherwise, where AQE's skew join splits a hot key (session.get_spark).
 
-    ``fuzzy_canonical=True`` clusters surface forms through the fuzzy tier —
-    MinHash-LSH candidate blocking (bounded per band bucket) → exact
-    token-Jaccard verify → connected components, checked against the
-    refimpl's identical md5-MinHash. The exhaustive token-block join
-    (fuzzy.fuzzy_self_pairs) is the J4/FastJoin parity surface, NOT this path.
+    ``fuzzy_canonical=True`` clusters surface forms through the fuzzy tier:
+    fuzzy.lsh_verified_pairs runs the label token sets through the one
+    MinHash-LSH kernel (canonical.minhash_lsh_pairs: signatures, bands
+    capped per bucket, exact token-Jaccard verify), then connected
+    components merge the pairs; the refimpl replicates the same md5
+    MinHash. The exhaustive token-block join (fuzzy.fuzzy_self_pairs) is the
+    J4/FastJoin parity surface, NOT this path.
 
     ``input_path`` (with optional ``input_format``) reads the transcripts
     from a parquet/csv(.gz)/json location via :func:`read_transcript_table`
     instead of the sf_dir's synthesized parquet. ``input_table`` reads a
     CATALOG table identifier — the Iceberg deployment shape
     (``spark.read.table("kg.db.transcripts")``), pinned locally against
-    ``spark_catalog`` managed tables."""
+    ``spark_catalog`` managed tables; its resume fingerprint is the listing
+    of the files it reads, so a rewrite of the table rebuilds."""
     ledger = StageLedger(spark, checkpoint_root) if checkpoint_root else None
     transcripts, fingerprint = _source(spark, sf_dir, input_path, input_format, input_table)
     sc = spark.sparkContext
@@ -193,9 +197,9 @@ def _code_digest() -> str:
 def _source(spark: SparkSession, sf_dir: str, input_path: str | None, input_format: str | None,
             input_table: str | None) -> tuple[DataFrame, Callable[[], str]]:
     """The transcript table and a function returning its resume fingerprint,
-    called only on the ledger path: a path's (size, mtime) listing, the
-    sf_dir parquet's footer row count, or a catalog table's identifier,
-    schema and count (one job; exactness needs the snapshot id)."""
+    called only on the ledger path: the sf_dir parquet's footer row count,
+    or the (path, size, mtime) listing of the files an input path or a
+    catalog table reads (no Spark job either way)."""
     if input_table is not None and input_path is not None:
         raise ValueError("pass input_table OR input_path, not both")
     if input_table is not None:
@@ -203,10 +207,7 @@ def _source(spark: SparkSession, sf_dir: str, input_path: str | None, input_form
         missing = [c for c in src.REQUIRED_COLUMNS if c not in df.columns]
         if missing:
             raise ValueError(f"table {input_table!r} lacks columns {missing}")
-        # catches schema evolution and cardinality changes, NOT a same-count
-        # in-place rewrite
-        schema = hashlib.md5(df.schema.simpleString().encode()).hexdigest()[:12]
-        return df, lambda: f"{input_table}:{schema}:{df.count()}"
+        return df, lambda: f"{input_table}:{_table_signature(spark, df)}"
     if input_path is not None:
         df = src.read_transcript_table(spark, input_path, input_format)
         return df, lambda: f"{input_path}:{_path_signature(input_path)}"
@@ -215,25 +216,44 @@ def _source(spark: SparkSession, sf_dir: str, input_path: str | None, input_form
     return spark.read.parquet(path), lambda: f"{sf_dir}:{pq.ParquetFile(path).metadata.num_rows}"
 
 
-def _path_signature(path: str) -> str:
-    """Driver-side input fingerprint for non-parquet inputs: md5 over the
-    sorted per-file (relative path, size, mtime) listing — cheap (metadata
-    only, no data read) and sensitive to any file being added, removed,
+def _listing_digest(files: list[tuple[str, int, float]]) -> str:
+    """md5 over a sorted per-file (path, size, mtime) listing — metadata
+    only, no data read, and sensitive to any file being added, removed,
     renamed, resized or touched (a sum/max signature missed same-total
-    swaps with preserved timestamps). On an object store, swap for the
-    listing's etags."""
+    swaps with preserved timestamps). On an object store, swap mtime for
+    the listing's etags."""
+    listing = "\n".join(f"{f}:{n}:{t}" for f, n, t in sorted(files))
+    return hashlib.md5(listing.encode()).hexdigest()
+
+
+def _path_signature(path: str) -> str:
+    """Listing digest of the files under a local input path."""
     files = []
     if os.path.isdir(path):
         for root, _, names in os.walk(path):
             files += [os.path.join(root, n) for n in names if not n.startswith((".", "_"))]
     elif os.path.exists(path):
         files = [path]
-    listing = "\n".join(
-        f"{os.path.relpath(f, path)}:{os.path.getsize(f)}:{os.path.getmtime(f)}"
-        for f in sorted(files)
-    )
-    return hashlib.md5(listing.encode()).hexdigest()
+    return _listing_digest([(f, os.path.getsize(f), os.path.getmtime(f)) for f in files])
+
+
+def _table_signature(spark: SparkSession, df: DataFrame) -> str:
+    """Listing digest of the files a file-backed catalog table reads
+    (``inputFiles()``, stat'ed through Hadoop's FileSystem, so any scheme
+    works), schema included. A rewrite with the same row count and schema
+    writes new files, so it changes the digest. A source that lists no
+    files (a non-file source; an Iceberg table would need its snapshot id)
+    cannot prove its identity: it gets a fresh fingerprint, so its stages
+    always rebuild."""
+    files = df.inputFiles()
+    if not files:
+        return uuid.uuid4().hex
+    hpath, conf = spark._jvm.org.apache.hadoop.fs.Path, spark._jsc.hadoopConfiguration()
+    stats = [hpath(f).getFileSystem(conf).getFileStatus(hpath(f)) for f in files]
+    listing = [(f, st.getLen(), st.getModificationTime()) for f, st in zip(files, stats)]
+    return f"{df.schema.simpleString()}:{_listing_digest(listing)}"
 
 
 def default_checkpoint_root(sf_dir: str) -> str:
-    return os.path.join("/root/repo/data/checkpoints", sf_tag_of_dir(sf_dir))
+    """The ledger root of an sf_dir build under the checkout's own data/."""
+    return os.path.join(REPO_ROOT, "data", "checkpoints", sf_tag_of_dir(sf_dir))

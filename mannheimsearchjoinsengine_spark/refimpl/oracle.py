@@ -147,8 +147,8 @@ def merge_map(facts: list[dict]) -> dict[str, str]:
 def fuzzy_label_map(facts: list[dict]) -> dict[str, str]:
     """subj_norm → component-min subj_norm via the SAME md5-MinHash-LSH
     blocking (8 hashes, 4 bands of 2) + exact token-jaccard ≥ 0.5 verify the
-    engine uses (canonical.minhash_candidate_pairs + fuzzy.verify_candidate_
-    pairs + connected components), re-implemented with dict/union-find."""
+    engine uses (fuzzy.lsh_verified_pairs, i.e. the canonical.minhash_lsh_pairs
+    kernel, + connected components), re-implemented with dict/union-find."""
     labels = sorted({f["subj"] for f in facts})
     toks = {l: set(t for t in l.split(" ") if t) for l in labels}
     buckets = defaultdict(list)

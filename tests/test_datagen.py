@@ -46,3 +46,44 @@ def test_skew_long_conversation():
     for r in t:
         sizes[r["conv_id"]] = sizes.get(r["conv_id"], 0) + 1
     assert max(sizes.values()) >= 60  # the designated hot conversation
+
+
+def test_default_paths_under_the_checkout(tmp_path):
+    """The generated-data directory and the default checkpoint root resolve
+    from the imported package's own location, not from a fixed path; the
+    data directory still follows SJSPARK_DATA_DIR when it is set. A package
+    imported from a ``--py-files`` zip uses the working directory."""
+    import os
+    import shutil
+    import subprocess
+    import sys
+
+    import mannheimsearchjoinsengine_spark as pkg
+
+    checkout = os.path.dirname(os.path.dirname(os.path.abspath(pkg.__file__)))
+    probe = (
+        "from mannheimsearchjoinsengine_spark import datagen\n"
+        "from mannheimsearchjoinsengine_spark.plans.pipeline import default_checkpoint_root\n"
+        "print(datagen.REPO_DATA)\n"
+        "print(default_checkpoint_root('/any/sf0.001'))\n"
+    )
+
+    def run(env):
+        out = subprocess.run(
+            [sys.executable, "-c", probe], env=env, cwd=str(tmp_path),
+            capture_output=True, text=True, check=True,
+        )
+        return out.stdout.split()
+
+    env = {k: v for k, v in os.environ.items() if k != "SJSPARK_DATA_DIR"}
+    env["PYTHONPATH"] = checkout
+    data_dir, ckpt_root = run(env)
+    assert data_dir == os.path.join(checkout, "data", "transcripts")
+    assert ckpt_root == os.path.join(checkout, "data", "checkpoints", "sf0.001")
+    override = str(tmp_path / "elsewhere")
+    assert run({**env, "SJSPARK_DATA_DIR": override})[0] == override
+    archive = shutil.make_archive(
+        str(tmp_path / "pkg"), "zip", checkout, "mannheimsearchjoinsengine_spark"
+    )
+    zipped_data_dir = run({**env, "PYTHONPATH": archive})[0]
+    assert zipped_data_dir == os.path.join(str(tmp_path), "data", "transcripts")

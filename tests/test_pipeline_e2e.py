@@ -459,3 +459,60 @@ def test_pipeline_catalog_table_io(spark, sf_dir, tmp_path):
             )
     finally:
         spark.sql("DROP DATABASE IF EXISTS kgtest CASCADE")
+
+
+def test_rewritten_catalog_table_rebuilds(spark, sf_dir, tmp_path):
+    """A catalog table rewritten in place with the same row count and
+    schema is a new input: a build on the first build's checkpoint root
+    returns the rewritten table's triples, not the first build's. The
+    rewrite keeps every text but reverses each role's texts, so the count,
+    the schema and the text multiset all stay the same."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = ensure_transcripts(sf_dir)
+    t = pq.read_table(path)
+    texts, roles = t.column("text").to_pylist(), t.column("role").to_pylist()
+    reversed_texts = list(texts)
+    for role in set(roles):
+        idx = [i for i, r in enumerate(roles) if r == role]
+        for i, j in zip(idx, reversed(idx)):
+            reversed_texts[i] = texts[j]
+    rewritten = str(tmp_path / "rewritten.parquet")
+    pq.write_table(
+        t.set_column(
+            t.schema.get_field_index("text"), "text", pa.array(reversed_texts, pa.string())
+        ),
+        rewritten,
+    )
+    expected = oracle.triples(rewritten)
+    assert expected != oracle.triples(path), "the rewrite must change the triples"
+
+    root = str(tmp_path / "ckpt")
+    spark.sql(f"CREATE DATABASE IF NOT EXISTS kgrewrite LOCATION '{tmp_path}/wh'")
+    try:
+        spark.read.parquet(path).write.saveAsTable("kgrewrite.transcripts")
+        run_pipeline(spark, sf_dir, checkpoint_root=root, input_table="kgrewrite.transcripts")
+        spark.read.parquet(rewritten).write.mode("overwrite").saveAsTable("kgrewrite.transcripts")
+        got = {
+            (r.subj, r.pred, r.obj, r.obj_dtype)
+            for r in run_pipeline(
+                spark, sf_dir, checkpoint_root=root, input_table="kgrewrite.transcripts"
+            )["triples"]
+            .select("subj", "pred", "obj", "obj_dtype")
+            .collect()
+        }
+        assert got == expected
+    finally:
+        spark.sql("DROP DATABASE IF EXISTS kgrewrite CASCADE")
+
+
+def test_table_signature_of_an_unlisted_source_never_repeats(spark, sf_dir):
+    """A table whose files Spark cannot list (here a frame built in memory)
+    cannot show that it is unchanged, so each fingerprint is new and its
+    stages rebuild; a file-backed frame keeps one fingerprint."""
+    mem = spark.createDataFrame([("c0", 0)], "conv_id string, turn_idx int")
+    assert mem.inputFiles() == []
+    assert pipeline._table_signature(spark, mem) != pipeline._table_signature(spark, mem)
+    files = spark.read.parquet(ensure_transcripts(sf_dir))
+    assert pipeline._table_signature(spark, files) == pipeline._table_signature(spark, files)
